@@ -299,8 +299,12 @@ object BatchWriter {
     val sized0 = rotationBucket match {
       case Some(bucket) => Rotation.withBucketChangeFileIndex(df,
         Seq(col("topic"), col("part")), col("off"), bucket, flushSize)
+      // prePartitioned: the input is hash-clustered by (topic, part),
+      // so the first offset is a per-task window, not an aggregate
+      // exchange plus a broadcast job
       case scala.None => Rotation.withSizeFileIndex(df,
-        Seq(col("topic"), col("part")), col("off"), flushSize)
+        Seq(col("topic"), col("part")), col("off"), flushSize,
+        clustered = prePartitioned)
     }
     val sized = if (dropAfterRotation.isEmpty) sized0
                 else sized0.drop(dropAfterRotation.distinct: _*)
@@ -486,7 +490,14 @@ object BatchWriter {
   /** Load an explicit committed-file list back into the stream schema
     * (`partition=` dir value → long `part`). Shared by the two compact
     * paths and the CommitLog snapshot reader — the rename/cast pair is
-    * subtle enough to exist exactly once. */
+    * subtle enough to exist exactly once.
+    *
+    * Encoded layouts (`hourly`, `daily`, `field`, `time`, custom) have
+    * no `partition=` directory: when any file sits outside one, the
+    * files load without directory discovery and `part` is the Kafka
+    * partition in each file's committed name. The encoded directories
+    * add no columns — their values are derived from payload columns
+    * the files already carry. */
   private[graft] def loadCommitted(spark: SparkSession, baseDir: String,
                                     format: String,
                                     paths: Seq[String]): DataFrame =
@@ -504,11 +515,16 @@ object BatchWriter {
     // touch few files; if a 100k-file full scan ever makes this the
     // bottleneck, the escape hatch is recording the schema per log
     // version and passing it explicitly.
-    spark.read.option("basePath", baseDir).option("mergeSchema", "true")
-      .format(format).load(paths: _*)
-      .withColumnRenamed("partition", "part")
-      // partition-dir discovery infers int; the stream schema is long
-      .withColumn("part", col("part").cast("long"))
+    if (paths.forall(p => new Path(p).getParent.getName.startsWith("partition=")))
+      spark.read.option("basePath", baseDir).option("mergeSchema", "true")
+        .format(format).load(paths: _*)
+        .withColumnRenamed("partition", "part")
+        // partition-dir discovery infers int; the stream schema is long
+        .withColumn("part", col("part").cast("long"))
+    else
+      spark.read.option("mergeSchema", "true").format(format).load(paths: _*)
+        .withColumn("part",
+          FileNaming.extractPartition(col("_metadata.file_name")).cast("long"))
 
   /** One job: read only the files being merged, assign group index by
     * offset range (broadcast ranges), and commit through the standard

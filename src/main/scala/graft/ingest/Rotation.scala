@@ -16,9 +16,24 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: Kafka offsets are dense per partition, so the
   * record→file assignment is pure arithmetic off the partition's first
-  * offset. We compute the per-partition minima as a tiny aggregate and
-  * broadcast-join them back — two map-side passes, no windows, no
-  * single-task sort of a whole partition's history.
+  * offset. That first offset has two forms:
+  *
+  *  - aggregate (the default): the per-partition minima as a tiny
+  *    aggregate broadcast-joined back — two map-side passes, no
+  *    windows, no single-task sort of a whole partition's history, and
+  *    no assumption about how the input is distributed. It costs its
+  *    own exchange and a broadcast job. Batch writes (`BatchWriter.
+  *    write`, `GraftConfig.write`, `CommitLog.writeLogged`) and the
+  *    single-topic streaming loops use it.
+  *  - in-task (`clustered = true`): when the caller guarantees the
+  *    input is already hash-clustered by the rotation keys (the
+  *    `prePartitioned` contract of `BatchWriter`), the minimum is a
+  *    window over those keys, computed inside each task with no
+  *    exchange and no extra job. The multi-topic streaming write
+  *    (`BatchWriter.writeMulti` with `prePartitioned = true`) uses it.
+  *
+  * Both forms yield the same first offset, so `file_idx` and the
+  * committed file names are identical.
   */
 object Rotation {
 
@@ -33,10 +48,15 @@ object Rotation {
     ((a - pmod(a, b)).cast("decimal(38,0)") / b.cast("decimal(38,0)"))
       .cast("long")
 
-  /** Join `df` with the per-key minimum of `valueCol` (broadcast — the
-    * aggregate has one row per topic-partition). */
+  /** Add the per-key minimum of `valueCol` as column `as`. Clustered
+    * input (see the object doc): a window over the keys, inside each
+    * task. Otherwise a broadcast join of the aggregate (one row per
+    * topic-partition). */
   private def withFirst(df: DataFrame, partitionBy: Seq[Column],
-                        valueCol: Column, as: String): DataFrame = {
+                        valueCol: Column, as: String,
+                        clustered: Boolean = false): DataFrame = {
+    if (clustered)
+      return df.withColumn(as, min(valueCol).over(Window.partitionBy(partitionBy: _*)))
     val keyed = df.withColumn("__rot_key",
       concat_ws("\u0000", partitionBy.map(_.cast("string")): _*))
     val firsts = keyed.groupBy(col("__rot_key")).agg(min(valueCol).as(as))
@@ -47,10 +67,13 @@ object Rotation {
     * `TopicPartitionWriter.java:521`, test `avro/DataWriterAvroTest.java:63-77`):
     * with dense per-partition offsets (the Kafka guarantee), the record
     * at `offset` lands in file `(offset - firstOffset) / flushSize`.
-    * Adds column `as` (default "file_idx"). */
+    * Adds column `as` (default "file_idx"). `clustered`: `df` is
+    * already hash-clustered by `partitionBy`, so the first offset is
+    * computed in-task (see the object doc). */
   def withSizeFileIndex(df: DataFrame, partitionBy: Seq[Column], offset: Column,
-                        flushSize: Int, as: String = "file_idx"): DataFrame =
-    withFirst(df, partitionBy, offset, "__first_offset")
+                        flushSize: Int, as: String = "file_idx",
+                        clustered: Boolean = false): DataFrame =
+    withFirst(df, partitionBy, offset, "__first_offset", clustered)
       .withColumn(as, longDiv(offset - col("__first_offset"), lit(flushSize.toLong)))
       .drop("__first_offset")
 

@@ -159,8 +159,7 @@ object DedupIngest {
     * wide file's columns. Fingerprinting excludes the envelope, so
     * layout differences (`partition=` vs encoded dirs) cannot skew the
     * rebuilt index — hence a plain content read, NOT
-    * BatchWriter.loadCommitted (which reconstructs `part` from
-    * `partition=` dirs and throws on encoded layouts). */
+    * BatchWriter.loadCommitted (which adds the envelope's `part`). */
   private[streaming] def fingerprintsOf(spark: SparkSession, outDir: String,
                              topic: String, format: String,
                              rels: Seq[String]): DataFrame = {

@@ -74,6 +74,18 @@ object StreamIngest {
     p.stripPrefix(root).stripPrefix("/")
   }
 
+  /** Publish one batch's committed files as a log version, then rebase
+    * snapshot replay on a [[CommitLog.checkpoint]] every `every`
+    * versions, so a year-old topic's reads and restarts stay O(tail),
+    * not O(every version ever published). The cadence every logged
+    * loop shares. */
+  private def publishBatch(spark: SparkSession, outDir: String, topic: String,
+                           rels: Seq[String], every: Int): Unit = {
+    val v = CommitLog.publish(spark, outDir, topic, rels)
+    if (every > 0 && v > 0 && v % every == 0) CommitLog.checkpoint(spark, outDir, topic)
+    ()
+  }
+
   /** The foreachBatch query scaffolding every commit loop shares:
     * checkpoint + optional trigger + start. */
   private[streaming] def batchQuery(stream: DataFrame, checkpoint: String,
@@ -149,22 +161,14 @@ object StreamIngest {
                   trigger: Option[Trigger] = None,
                   format: String = "parquet",
                   avroCodec: String = "null",
-                  logCheckpointEvery: Int = 64): StreamingQuery = {
+                  logCheckpointEvery: Int = LogCheckpointEvery): StreamingQuery = {
     val spark = stream.sparkSession
     commitLoop(stream, checkpoint, trigger,
       initial = CommitLog.maxOffsets(spark, outDir, topic),
       writeFn = writerFor(outDir, topic, flushSize, format, avroCodec,
         prePartitioned = true),
-      afterWrite = manifest => {
-        val v = CommitLog.publish(spark, outDir, topic,
-          manifest.map(c => relPath(outDir, topic, c.path)))
-        // rebase snapshot replay periodically so a year-old topic's
-        // reads stay O(tail), not O(every version ever published)
-        if (logCheckpointEvery > 0 && v > 0 && v % logCheckpointEvery == 0) {
-          CommitLog.checkpoint(spark, outDir, topic)
-          ()
-        }
-      })
+      afterWrite = manifest => publishBatch(spark, outDir, topic,
+        manifest.map(c => relPath(outDir, topic, c.path)), logCheckpointEvery))
   }
 
   /** [[startLogged]] plus the reference's LIVE Hive sync
@@ -184,7 +188,7 @@ object StreamIngest {
                       database: Option[String] = None,
                       trigger: Option[Trigger] = None,
                       format: String = "parquet",
-                      logCheckpointEvery: Int = 64): StreamingQuery = {
+                      logCheckpointEvery: Int = LogCheckpointEvery): StreamingQuery = {
     val spark = stream.sparkSession
     val initial = CommitLog.maxOffsets(spark, outDir, topic)
     var tableReady = false
@@ -210,15 +214,8 @@ object StreamIngest {
         write(batch)
       },
       afterWrite = manifest => {
-        val v = CommitLog.publish(spark, outDir, topic,
-          manifest.map(c => relPath(outDir, topic, c.path)))
-        // same replay-rebase cadence as startLogged: without it a
-        // long-lived Hive-synced stream accumulates one log version
-        // per micro-batch and every restart/read replays them all
-        if (logCheckpointEvery > 0 && v > 0 && v % logCheckpointEvery == 0) {
-          CommitLog.checkpoint(spark, outDir, topic)
-          ()
-        }
+        publishBatch(spark, outDir, topic,
+          manifest.map(c => relPath(outDir, topic, c.path)), logCheckpointEvery)
         manifest.map(_.partition).distinct.filterNot(registered).foreach { p =>
           TableCatalog.addPartition(spark, table, Map("partition" -> p),
             database)
@@ -242,20 +239,15 @@ object StreamIngest {
                            trigger: Option[Trigger] = None,
                            format: String = "parquet",
                            avroCodec: String = "null",
-                           logCheckpointEvery: Int = 64): StreamingQuery = {
+                           logCheckpointEvery: Int = LogCheckpointEvery): StreamingQuery = {
     val spark = stream.sparkSession
     commitLoop(stream, checkpoint, trigger,
       initial = CommitLog.maxOffsets(spark, outDir, topic),
       writeFn = writerFor(outDir, topic, flushSize, format, avroCodec,
         prePartitioned = true),
       afterWrite = manifest => {
-        val v = CommitLog.publish(spark, outDir, topic,
-          manifest.map(c => relPath(outDir, topic, c.path)))
-        // same replay-rebase cadence as startLogged (see startLoggedHive)
-        if (logCheckpointEvery > 0 && v > 0 && v % logCheckpointEvery == 0) {
-          CommitLog.checkpoint(spark, outDir, topic)
-          ()
-        }
+        publishBatch(spark, outDir, topic,
+          manifest.map(c => relPath(outDir, topic, c.path)), logCheckpointEvery)
         graft.ingest.MaterializedAgg.refreshAll(spark, outDir, topic,
           views, format)
       })
@@ -441,10 +433,13 @@ object StreamIngest {
       writeFn = b => Retry.withBackoff(2, cfg.retryBackoffMs)(
         cfg.write(reproject(cfg.applySmts(b, includeRouters = false)),
           outDir, topic)),
-      afterWrite = manifest =>
-        CommitLog.publish(spark, root, topic,
-          manifest.map(c => relPath(root, topic, c.path))))
+      afterWrite = manifest => publishBatch(spark, root, topic,
+        manifest.map(c => relPath(root, topic, c.path)), LogCheckpointEvery))
   }
+
+  /** The default log-checkpoint cadence, in versions, of every logged
+    * loop (the config-driven overloads take no argument for it). */
+  private val LogCheckpointEvery = 64
 
   /** [[startLogged]] against the configured store root — the streaming
     * consumer of `store.url`/`hdfs.url` (same precedence as
@@ -564,32 +559,47 @@ object StreamIngest {
     *
     * Per-topic isolation matches the reference's
     * writer-per-TopicPartition model: each topic keeps its OWN commit
-    * log (atomic version publish) and its own committed-offset map,
-    * recovered from that topic's log the first time the topic appears
-    * in the stream and maintained incrementally after. A crash between
-    * topic A's publish and topic B's publish replays the batch; A's
-    * resume filter drops its already-committed offsets (idempotent
-    * redo), B ingests as if the crash never happened — exactly-once
-    * per topic, no cross-topic coupling.
+    * log (atomic version publish) and its own committed-offset map. A
+    * crash between topic A's publish and topic B's publish replays the
+    * batch; A's resume filter drops its already-committed offsets
+    * (idempotent redo), B ingests as if the crash never happened —
+    * exactly-once per topic, no cross-topic coupling.
+    *
+    * Offset recovery happens ONCE, at query start, for every logged
+    * topic under `outDir` ([[CommitLog.topics]] + [[CommitLog.maxOffsets]],
+    * metadata only — the reference's recover-on-start,
+    * `HdfsSinkTask.java:145-149`). A topic with a log that reappears
+    * later in the stream is filtered against that recovered map; a
+    * topic with no log starts empty, and every topic advances from
+    * its own publish manifests after that. The one-writer-per-topic
+    * discipline is what makes this exact: no other writer grows a
+    * topic's log behind the running query.
     *
     * `stream` is shaped (topic, part, off, payload...); the `topic`
     * column routes and becomes the directory
     * (`<outDir>/<topic>/partition=<p>/`), never file content.
     * Pair with `KafkaSource.fromTopics` + `normalize` in production.
     *
-    * Scale shape: job count per micro-batch is O(1) in topic count —
-    * one (topic, part)-keyed resume filter (broadcast join over the
-    * per-partition offset maps, metadata-scale), ONE staging job
+    * Scale shape: job count per micro-batch is O(1) in topic count,
+    * about 5 jobs — ONE payload exchange keyed (topic, part) that the
+    * dedup, the (topic, part)-keyed resume filter (broadcast join over
+    * the recovered offset maps, metadata-scale), the first-offset /
+    * rotation windows (computed inside each task, see [[Rotation]])
+    * and the staging write all ride; ONE staging job
     * dynamic-partitioned by (topic, part, file_idx)
-    * (`BatchWriter.writeMulti`), one manifest aggregate. Only the
-    * COMMIT stays per-topic — each topic's log is its own atomicity
-    * domain, and those publishes are driver-side metadata ops.
+    * (`BatchWriter.writeMulti`), whose pinned frame the manifest
+    * aggregate reads back. No per-batch topic roster is collected.
+    * Only the COMMIT stays per-topic — each topic's log is its own
+    * atomicity domain, and those publishes are driver-side metadata
+    * ops.
     *
-    * Avro is the exception to O(1): the avro-core sink cannot join the
-    * dynamic-partitioned staging job, so `format = "avro"` slices the
-    * pinned batch per topic and commits each through [[AvroSink]] —
-    * O(topics) jobs per micro-batch over the CACHED batch (no source
-    * re-scan), the same per-writer fan-out the reference's demux runs.
+    * Avro and per-topic schema projection are the exception to O(1):
+    * the avro-core sink cannot join the dynamic-partitioned staging
+    * job, and projected slices are structurally different frames, so
+    * those configurations pin the resume-filtered batch, collect its
+    * topic roster, and commit each topic's slice on its own — O(topics)
+    * jobs per micro-batch over the CACHED batch (no source re-scan),
+    * the same per-writer fan-out the reference's demux runs.
     * Commit/replay semantics are identical. `rotationBucket` rotates
     * every format: the BatchWriter formats inside the one staging job
     * (keyed per (topic, part)), avro inside its fan-out slices;
@@ -612,14 +622,23 @@ object StreamIngest {
                        views: Map[String,
                          Seq[graft.ingest.MaterializedAgg.ViewDef]] =
                            Map.empty,
-                       logCheckpointEvery: Int = 64)
+                       logCheckpointEvery: Int = LogCheckpointEvery)
       : StreamingQuery = {
     require(rotationBucket.isEmpty || perTopicProjection.isEmpty,
       "per-topic schema projection writes through the per-topic " +
         "fan-out, which does not rotate; run rotated+projected topics " +
         "through the single-topic overload")
     val spark = stream.sparkSession
-    val committed = scala.collection.mutable.Map.empty[String, Map[Long, Long]]
+    // recover-on-start for every logged topic under the root (see the
+    // scaladoc); topics first committed by this query enter from their
+    // manifests below
+    var committed: Map[String, Map[Long, Long]] =
+      CommitLog.topics(spark, outDir)
+        .map(t => t -> CommitLog.maxOffsets(spark, outDir, t)).toMap
+    // avro cannot join the dynamic-partitioned staging job; per-topic
+    // schema projection makes slices structurally DIFFERENT frames —
+    // both take the per-topic fan-out
+    val fanOut = format == "avro" || perTopicProjection.isDefined
     batchQuery(stream, checkpoint, trigger) { batch =>
       // one dedup keyed (topic, part, off) — offsets are per-topic
       // sequences, so the same (part, off) on two topics is two
@@ -629,83 +648,64 @@ object StreamIngest {
       // re-routing to the topic whose log already holds it.
       // ONE payload exchange per micro-batch (r18, same shape as the
       // single-topic loop): hash by (topic, part) up front; the dedup,
-      // the rotation windows/aggregates, the staging write
+      // the resume filter, the rotation windows, the staging write
       // (prePartitioned below) and the manifest aggregate all ride it.
-      val deduped = prepare(batch).repartition(col("topic"), col("part"))
-        .dropDuplicates("topic", "part", "off")
-        .persist()
-      try {
-        // the topic roster of THIS batch is metadata-scale (the
-        // reference holds one writer map per assigned topic too);
-        // first sighting of a topic recovers its offsets from its log
-        val topics = deduped.select("topic").distinct()
-          .collect().map(_.getString(0)).sorted
-        topics.foreach { topic =>
-          committed.getOrElseUpdate(topic,
-            CommitLog.maxOffsets(spark, outDir, topic))
-          ()
-        }
-        val fresh = BatchWriter.resumeFromMulti(deduped, committed.toMap)
-          .persist()
-        try {
-          // no isEmpty pre-probe (r17) — same reasoning as the
-          // single-topic loop: an all-replayed batch stages nothing
-          // and yields an empty manifest, and the per-topic publish
-          // loop below iterates zero groups.
-          {
-            val manifest = Retry.withBackoff(writeRetries, retryBackoffMs)(
-              // avro cannot join the dynamic-partitioned staging job;
-              // per-topic schema projection makes slices structurally
-              // DIFFERENT frames — both take the per-topic fan-out
-              // (O(topics) jobs over the cached batch, the reference's
-              // own per-writer shape)
-              if (format == "avro" || perTopicProjection.isDefined)
-                topics.toSeq.flatMap { t =>
-                  val slice0 = fresh.filter(col("topic") === t).drop("topic")
-                  val slice = perTopicProjection
-                    .map(p => p(t)(slice0)).getOrElse(slice0)
-                  if (slice.isEmpty) Seq.empty
-                  else if (format == "avro")
-                    // rotation rides the per-topic fan-out: the bucket
-                    // expression reads the slice's record-time column
-                    // (still present — only `topic` was dropped)
-                    AvroSink.write(slice, outDir, t, flushSize, pad,
-                      avroCodec, rotationBucket)
-                  else
-                    BatchWriter.write(slice, outDir, t, flushSize, pad, format)
-                }
+      // No pin here: the staging write pins its own input for the
+      // manifest (BatchWriter.stageAndCommit).
+      val fresh = BatchWriter.resumeFromMulti(
+        prepare(batch).repartition(col("topic"), col("part"))
+          .dropDuplicates("topic", "part", "off"),
+        committed)
+      // no isEmpty pre-probe (r17) — same reasoning as the
+      // single-topic loop: an all-replayed batch stages nothing and
+      // yields an empty manifest, and the per-topic publish loop below
+      // iterates zero groups.
+      val manifest =
+        if (fanOut) {
+          // the per-topic fan-out reads the batch once per topic: pin
+          // it, and collect its topic roster
+          val pinned = fresh.persist()
+          try {
+            val topics = pinned.select("topic").distinct()
+              .collect().map(_.getString(0)).sorted.toSeq
+            Retry.withBackoff(writeRetries, retryBackoffMs)(topics.flatMap { t =>
+              val slice0 = pinned.filter(col("topic") === t).drop("topic")
+              val slice = perTopicProjection
+                .map(p => p(t)(slice0)).getOrElse(slice0)
+              if (slice.isEmpty) Seq.empty
+              else if (format == "avro")
+                // rotation rides the per-topic fan-out: the bucket
+                // expression reads the slice's record-time column
+                // (still present — only `topic` was dropped)
+                AvroSink.write(slice, outDir, t, flushSize, pad,
+                  avroCodec, rotationBucket)
               else
-                BatchWriter.writeMulti(fresh, outDir, flushSize, pad, format,
-                  rotationBucket, rotationDrop, prePartitioned = true))
-            manifest.groupBy(_.topic).toSeq.sortBy(_._1)
-              .foreach { case (topic, files) =>
-                val v = CommitLog.publish(spark, outDir, topic, files.map { c =>
-                  s"partition=${c.partition}/" +
-                    new org.apache.hadoop.fs.Path(c.path).getName
-                })
-                // per-topic snapshot-replay rebase, same cadence
-                // contract as the single-topic plane
-                if (logCheckpointEvery > 0 && v > 0 &&
-                  v % logCheckpointEvery == 0) {
-                  CommitLog.checkpoint(spark, outDir, topic)
-                  ()
-                }
-                committed(topic) = files.foldLeft(committed(topic)) { (m, f) =>
-                  m.updated(f.partition,
-                    math.max(m.getOrElse(f.partition, -1L), f.endOffset))
-                }
-                // per-topic materialized views: refresh AFTER this
-                // topic's data publish (same ordering contract as
-                // startLoggedWithViews — a crash mid-refresh leaves
-                // the view stale, and its filename watermark back-
-                // fills it exactly on the topic's next batch)
-                views.get(topic).foreach(vs =>
-                  graft.ingest.MaterializedAgg.refreshAll(
-                    spark, outDir, topic, vs, format))
-              }
-          }
-        } finally { fresh.unpersist(); () }
-      } finally { deduped.unpersist(); () }
+                BatchWriter.write(slice, outDir, t, flushSize, pad, format)
+            })
+          } finally { pinned.unpersist(); () }
+        } else Retry.withBackoff(writeRetries, retryBackoffMs)(
+          BatchWriter.writeMulti(fresh, outDir, flushSize, pad, format,
+            rotationBucket, rotationDrop, prePartitioned = true))
+      manifest.groupBy(_.topic).toSeq.sortBy(_._1)
+        .foreach { case (topic, files) =>
+          publishBatch(spark, outDir, topic, files.map { c =>
+            s"partition=${c.partition}/" +
+              new org.apache.hadoop.fs.Path(c.path).getName
+          }, logCheckpointEvery)
+          committed = committed.updated(topic,
+            files.foldLeft(committed.getOrElse(topic, Map.empty[Long, Long])) {
+              (m, f) => m.updated(f.partition,
+                math.max(m.getOrElse(f.partition, -1L), f.endOffset))
+            })
+          // per-topic materialized views: refresh AFTER this topic's
+          // data publish (same ordering contract as
+          // startLoggedWithViews — a crash mid-refresh leaves the view
+          // stale, and its filename watermark back-fills it exactly on
+          // the topic's next batch)
+          views.get(topic).foreach(vs =>
+            graft.ingest.MaterializedAgg.refreshAll(
+              spark, outDir, topic, vs, format))
+        }
     }
   }
 

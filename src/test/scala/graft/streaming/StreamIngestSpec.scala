@@ -1056,4 +1056,171 @@ class StreamIngestSpec extends SparkSuite {
       StructField("payload", StringType)))
     assert(AvroSink.readDataFrame(spark, s"$root/t", schema).count() === 3)
   }
+
+  test("multi-topic recovery at query start: a logged topic that reappears later drops its replay; a new topic advances from its manifest") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.ingest.CommitLog
+    val out = Files.createTempDirectory("graft-multi-recover").toString
+    def start(s: MemoryStream[(String, Long, Long, String)]) =
+      StreamIngest.startLoggedMulti(s.toDF().toDF("topic", "part", "off", "payload"),
+        out, 10, Files.createTempDirectory("graft-mrec-ckpt").toString)
+    def recs(t: String, offs: Range) = offs.map(o => (t, 0L, o.toLong, s"$t$o"))
+
+    val s1 = MemoryStream[(String, Long, Long, String)]
+    val q1 = start(s1)
+    s1.addData(recs("alpha", 0 to 2) ++ recs("beta", 0 to 2): _*)
+    q1.processAllAvailable()
+    q1.stop()
+
+    // restart: beta has a log but is absent from the first two batches,
+    // then returns with its committed offsets replayed; gamma has no
+    // log and is first committed by this query, then replayed too
+    val s2 = MemoryStream[(String, Long, Long, String)]
+    val q2 = start(s2)
+    s2.addData(recs("alpha", 0 to 4): _*)
+    q2.processAllAvailable()
+    s2.addData(recs("alpha", 5 to 5) ++ recs("gamma", 0 to 1): _*)
+    q2.processAllAvailable()
+    s2.addData(recs("beta", 0 to 3) ++ recs("gamma", 0 to 2): _*)
+    q2.processAllAvailable()
+    q2.stop()
+
+    for ((t, n) <- Seq("alpha" -> 6, "beta" -> 4, "gamma" -> 3)) {
+      val back = CommitLog.read(spark, out, t).select($"off").as[Long].collect()
+      assert(back.sorted.toSeq === (0L until n.toLong), t)
+      assert(CommitLog.maxOffsets(spark, out, t) === Map(0L -> (n - 1).toLong), t)
+    }
+    // the replayed offsets never reached a file: beta's only new file
+    // holds offset 3, gamma's second file offset 2
+    assert(BatchWriter.listCommitted(spark, out, "beta") === Seq(
+      "beta+0+0000000000+0000000002.parquet",
+      "beta+0+0000000003+0000000003.parquet"))
+    assert(BatchWriter.listCommitted(spark, out, "gamma") === Seq(
+      "gamma+0+0000000000+0000000001.parquet",
+      "gamma+0+0000000002+0000000002.parquet"))
+  }
+
+  test("dead-letter and router restarts stay exactly-once when a side first reappears in a later batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.ingest.{CommitLog, GraftConfig}
+    val out = Files.createTempDirectory("graft-dlq-later").toString
+    val valid = get_json_object(col("payload"), "$.k").isNotNull
+    def dlq(s: MemoryStream[(Long, Long, String)]) =
+      StreamIngest.startLoggedDlq(s.toDF().toDF("part", "off", "payload"), out,
+        "ev", valid, flushSize = 10,
+        checkpoint = Files.createTempDirectory("graft-dlql-ckpt").toString)
+    val s1 = MemoryStream[(Long, Long, String)]
+    val q1 = dlq(s1)
+    s1.addData((0L, 0L, """{"k":0}"""), (0L, 1L, "bad1"))
+    q1.processAllAvailable()
+    q1.stop()
+    // restart: the first batch carries only valid records; the DLQ side
+    // returns one batch later with its committed record replayed
+    val s2 = MemoryStream[(Long, Long, String)]
+    val q2 = dlq(s2)
+    s2.addData((0L, 0L, """{"k":0}"""), (0L, 2L, """{"k":2}"""))
+    q2.processAllAvailable()
+    s2.addData((0L, 1L, "bad1"), (0L, 3L, "bad3"))
+    q2.processAllAvailable()
+    q2.stop()
+    assert(CommitLog.read(spark, out, "ev").select($"off").as[Long]
+      .collect().sorted.toSeq === Seq(0L, 2L))
+    assert(CommitLog.read(spark, out, "ev.dlq").select($"off").as[Long]
+      .collect().sorted.toSeq === Seq(1L, 3L))
+
+    // a RegexRouter rewrites the topic; the routed topic is what is
+    // logged and recovered at restart
+    val cfg = GraftConfig(Map("flush.size" -> "10", "transforms" -> "r",
+      "transforms.r.type" -> "RegexRouter",
+      "transforms.r.regex" -> "(.*)-v1", "transforms.r.replacement" -> "$1"))
+    val root = cfg.topicsRoot(out)
+    def routed(s: MemoryStream[(String, Long, Long, String)]) =
+      StreamIngest.startLoggedMulti(s.toDF().toDF("topic", "part", "off", "payload"),
+        out, cfg, Files.createTempDirectory("graft-route-ckpt").toString)
+    val r1 = MemoryStream[(String, Long, Long, String)]
+    val rq1 = routed(r1)
+    r1.addData(("orders-v1", 0L, 0L, "o0"), ("orders-v1", 0L, 1L, "o1"))
+    rq1.processAllAvailable()
+    rq1.stop()
+    val r2 = MemoryStream[(String, Long, Long, String)]
+    val rq2 = routed(r2)
+    r2.addData(("audit", 0L, 0L, "a0"))
+    rq2.processAllAvailable()
+    r2.addData(("orders-v1", 0L, 0L, "o0"), ("orders-v1", 0L, 1L, "o1"),
+      ("orders-v1", 0L, 2L, "o2"))
+    rq2.processAllAvailable()
+    rq2.stop()
+    assert(CommitLog.read(spark, root, "orders").select($"payload").as[String]
+      .collect().sorted.toSeq === Seq("o0", "o1", "o2"))
+    assert(CommitLog.read(spark, root, "audit").count() === 1)
+  }
+
+  test("cfg-driven startLogged checkpoints its log every 64 versions; offset recovery replays only the tail") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.ingest.{CommitLog, GraftConfig}
+    val out = Files.createTempDirectory("graft-cfg-ckpt").toString
+    val cfg = GraftConfig(Map("flush.size" -> "1"))
+    val root = cfg.topicsRoot(out)
+    // a 63-version history: offsets 0..62, one file per version
+    val hist = cfg.write((0L until 63L).map(o => (0L, o, s"p$o"))
+      .toDF("part", "off", "payload"), out, "t")
+    hist.map(c => StreamIngest.relPath(root, "t", c.path)).sorted
+      .foreach(rel => CommitLog.publish(spark, root, "t", Seq(rel)))
+    assert(CommitLog.latestVersion(spark, root, "t") === 62L)
+
+    val s = MemoryStream[(Long, Long, String)]
+    val q = StreamIngest.startLogged(s.toDF().toDF("part", "off", "payload"),
+      out, "t", cfg, Files.createTempDirectory("graft-cfgc-ckpt").toString)
+    for (o <- 63L to 64L) { s.addData((0L, o, s"p$o")); q.processAllAvailable() }
+    q.stop()
+    val f = CommitLog.fs(spark, root)
+    assert(f.exists(new org.apache.hadoop.fs.Path(s"$root/t/_commitlog/64.ckpt")))
+    // versions below the checkpoint are no longer replayed: corrupting
+    // the first one changes neither offset recovery nor the read
+    val v0 = f.create(new org.apache.hadoop.fs.Path(s"$root/t/_commitlog/0"), true)
+    try v0.write("not a log line\n".getBytes("UTF-8")) finally v0.close()
+    assert(CommitLog.maxOffsets(spark, root, "t") === Map(0L -> 64L))
+    assert(CommitLog.read(spark, root, "t").count() === 65)
+  }
+
+  test("hourly layout written through startLogged(cfg) reads back through read, asOf and readAddedSince") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.ingest.{CommitLog, GraftConfig}
+    val out = Files.createTempDirectory("graft-hourly-read").toString
+    val cfg = GraftConfig(Map("flush.size" -> "10",
+      "partitioner.class" -> "hourly"))
+    val root = cfg.topicsRoot(out)
+    def t(s: String) = Timestamp.valueOf(s)
+    val s = MemoryStream[(Long, Long, Timestamp, String)]
+    val q = StreamIngest.startLogged(
+      s.toDF().toDF("part", "off", "timestamp", "payload"), out, "t", cfg,
+      Files.createTempDirectory("graft-hourly-ckpt").toString)
+    s.addData((0L, 0L, t("2026-03-01 10:10:00"), "a"),
+      (0L, 1L, t("2026-03-01 11:10:00"), "b"),
+      (1L, 0L, t("2026-03-01 10:20:00"), "c"))
+    q.processAllAvailable()
+    s.addData((1L, 1L, t("2026-03-01 12:05:00"), "d"),
+      (0L, 2L, t("2026-03-01 11:40:00"), "e"))
+    q.processAllAvailable()
+    q.stop()
+    assert(CommitLog.snapshot(spark, root, "t").forall(_.startsWith("year=")))
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"part", $"off", $"payload").as[(Long, Long, String)]
+        .collect().sortBy(r => (r._1, r._2)).toSeq
+    val all = CommitLog.read(spark, root, "t")
+    // the stream shape comes back: `part` from the committed names, no
+    // columns from the encoded directories
+    assert(all.columns.toSet === Set("part", "off", "timestamp", "payload"))
+    assert(rows(all) === Seq((0L, 0L, "a"), (0L, 1L, "b"), (0L, 2L, "e"),
+      (1L, 0L, "c"), (1L, 1L, "d")))
+    assert(rows(CommitLog.read(spark, root, "t", asOf = 0L)) ===
+      Seq((0L, 0L, "a"), (0L, 1L, "b"), (1L, 0L, "c")))
+    assert(rows(CommitLog.readAddedSince(spark, root, "t", 0L)) ===
+      Seq((0L, 2L, "e"), (1L, 1L, "d")))
+  }
 }
