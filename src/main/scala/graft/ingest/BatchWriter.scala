@@ -320,23 +320,6 @@ object BatchWriter {
       prePartitioned = prePartitioned)
   }
 
-  /** [[resumeFrom]] with per-topic committed maps: one broadcast join
-    * keyed (topic, part) filters the whole mixed stream in a single
-    * pass — no per-topic slicing. */
-  def resumeFromMulti(df: DataFrame,
-                      committed: Map[String, Map[Long, Long]]): DataFrame = {
-    val rows = committed.toSeq.flatMap { case (t, m) =>
-      m.toSeq.map { case (p, o) => (t, p, o) }
-    }
-    if (rows.isEmpty) return df
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offs = rows.toDF("topic", "part", "__max_committed")
-    df.join(broadcast(offs), Seq("topic", "part"), "left")
-      .filter(col("__max_committed").isNull || col("off") > col("__max_committed"))
-      .drop("__max_committed")
-  }
-
   /** Formats compaction can read back with their own schema and the
     * `off` column intact (csv drops names without a header; text
     * carries offsets only in the filename). */
@@ -598,16 +581,29 @@ object BatchWriter {
     }.groupMapReduce(_._1)(_._2)(math.max)
   }
 
-  /** Resume filter: drop records at or below each partition's committed
-    * offset (the `context.offset(tp, max+1)` rewind,
-    * `TopicPartitionWriter.java:611-634`). Broadcast join — the offsets
-    * map has one row per partition. */
-  def resumeFrom(df: DataFrame, committed: Map[Long, Long]): DataFrame = {
-    if (committed.isEmpty) return df
+  /** Resume filter: drop records at or below their partition's
+    * committed offset (the `context.offset(tp, max+1)` rewind,
+    * `TopicPartitionWriter.java:611-634`). `committed` maps each topic
+    * to its per-partition maxima. `byTopic` keys a mixed stream's rows
+    * by their (topic, part); without it the frame is ONE topic's
+    * stream (a `topic` column, if any, is content), `committed` holds
+    * at most that topic, and rows key by `part` alone. Broadcast join —
+    * one row per committed (topic, part), and no join at all before
+    * anything is committed. */
+  def resumeFrom(df: DataFrame, committed: Map[String, Map[Long, Long]],
+                 byTopic: Boolean = false): DataFrame = {
+    require(byTopic || committed.size <= 1,
+      s"a single-topic resume filter takes one topic's offsets, got ${committed.keys}")
+    val rows = committed.toSeq.flatMap { case (t, m) =>
+      m.toSeq.map { case (p, o) => (t, p, o) }
+    }
+    if (rows.isEmpty) return df
     val spark = df.sparkSession
     import spark.implicits._
-    val offs = committed.toSeq.toDF("part", "__max_committed")
-    df.join(broadcast(offs), Seq("part"), "left")
+    val (keys, offs) =
+      if (byTopic) (Seq("topic", "part"), rows.toDF("topic", "part", "__max_committed"))
+      else (Seq("part"), rows.map(r => (r._2, r._3)).toDF("part", "__max_committed"))
+    df.join(broadcast(offs), keys, "left")
       .filter(col("__max_committed").isNull || col("off") > col("__max_committed"))
       .drop("__max_committed")
   }

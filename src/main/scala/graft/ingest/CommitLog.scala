@@ -650,7 +650,8 @@ object CommitLog {
     val current = latestVersion(spark, outDir, dstTopic)
     if (fresh.isEmpty) return current
     val rows = BatchWriter.resumeFrom(
-      readFiles(spark, outDir, srcTopic, fresh.map(_._1), format), done)
+      readFiles(spark, outDir, srcTopic, fresh.map(_._1), format),
+      Map(dstTopic -> done))
     val out = transform(rows)
     Seq("part", "off").foreach(c => require(out.columns.contains(c),
       s"relay transforms must preserve the ($c) envelope column — " +

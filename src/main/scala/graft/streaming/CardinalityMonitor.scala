@@ -76,39 +76,35 @@ object CardinalityMonitor {
     // format must round-trip exactly (the dedup gate's shared contract)
     DedupIngest.requireRereadable(format, "cardinality monitoring")
     reconcile(spark, outDir, topic, format, k)
-    // projection-only prep - partitioning preserved (r18)
-    val write = StreamIngest.writerFor(outDir, topic, flushSize, format,
-      avroCodec, prePartitioned = true)
-    StreamIngest.commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = fresh => {
+    StreamIngest.commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
+        prePartitioned = true),
+      admit = fresh => {
+        // a projection: partitioning preserved (r18). The write and the
+        // sketch install both read it: pin it
         val withFp = fresh.withColumn("__fp", DedupIngest.fingerprint(fresh))
           .persist()
-        try {
-          val contribution = minK(withFp, k)
-          val manifest = write(withFp.drop("__fp"))
-          val version = CommitLog.publish(spark, outDir, topic,
-            manifest.map(c => StreamIngest.relPath(outDir, topic, c.path)))
-          DedupIngest.installVersionFile(DedupIngest.hfs(spark, outDir),
-            kmvDirPath(outDir, topic), version, contribution)
-          // auto-compaction: without it the plane grows one ≤k-row
-          // file per commit forever and estimate() degrades to
-          // O(versions·k) file opens on a long stream. Fold once the
-          // listing (metadata-scale, one plane dir) crosses the
-          // threshold — the min-k of a union IS the union's sketch,
-          // so estimates are unchanged by construction, and the
-          // crash-ordered install keeps a died-mid-fold plane
-          // readable (reconcile heals it like any other gap).
-          if (compactEvery > 0 &&
-            DedupIngest.fpFiles(DedupIngest.hfs(spark, outDir),
-              kmvDirPath(outDir, topic)).size > compactEvery) {
-            compact(spark, outDir, topic, k)
-            ()
-          }
-          manifest
-        } finally { withFp.unpersist(); () }
-      },
-      afterWrite = _ => ())
+        StreamIngest.Admission(withFp.drop("__fp"),
+          install = v => {
+            val f = DedupIngest.hfs(spark, outDir)
+            DedupIngest.installVersionFile(f, kmvDirPath(outDir, topic), v,
+              minK(withFp, k))
+            // auto-compaction: without it the plane grows one ≤k-row
+            // file per commit forever and estimate() degrades to
+            // O(versions·k) file opens on a long stream. Fold once the
+            // listing (metadata-scale, one plane dir) crosses the
+            // threshold — the min-k of a union IS the union's sketch,
+            // so estimates are unchanged by construction, and the
+            // crash-ordered install keeps a died-mid-fold plane
+            // readable (reconcile heals it like any other gap).
+            if (compactEvery > 0 &&
+              DedupIngest.fpFiles(f, kmvDirPath(outDir, topic)).size > compactEvery) {
+              compact(spark, outDir, topic, k)
+              ()
+            }
+          },
+          pinned = Seq(withFp))
+      })
   }
 
   /** Heal the sketch plane against the commit log — versions above

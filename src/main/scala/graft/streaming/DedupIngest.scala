@@ -509,36 +509,24 @@ object DedupIngest {
     val spark = stream.sparkSession
     NativeExpressions.register(spark)
     reconcileSignatures(spark, outDir, topic, textCol, format)
-    // one payload exchange per batch (r18): the admitted frame is
-    // fresh filtered through a BROADCAST anti-join - partitioning
-    // preserved from commitLoop's part-hash
-    val write = StreamIngest.writerFor(outDir, topic, flushSize, format,
-      avroCodec, prePartitioned = true)
-    StreamIngest.commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = fresh => {
-        val bsig = sigOf(fresh, textCol, Seq("part", "off"))
-        val dup = dupAgainstIndex(spark, outDir, topic, bsig,
-          Seq("part", "off"), minAgree, rowsPerBand)
-        // `fresh` is persisted by commitLoop; only the gated frame
-        // needs its own pin (isEmpty + write + re-sig would otherwise
-        // re-run the gate)
+    StreamIngest.commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
+        prePartitioned = true),
+      admit = fresh => {
+        val dup = dupAgainstIndex(spark, outDir, topic,
+          sigOf(fresh, textCol, Seq("part", "off")), Seq("part", "off"),
+          minAgree, rowsPerBand)
+        // a BROADCAST anti-join keeps the loop's partitioning (r18). The
+        // write and the signature install both read the admitted frame:
+        // pin it, so the install does not re-run the index probe
         val admitted = fresh
           .join(broadcast(dup), Seq("part", "off"), "left_anti").persist()
-        try {
-          if (admitted.isEmpty) Seq.empty
-          else {
-            val manifest = write(admitted)
-            val version = CommitLog.publish(spark, outDir, topic,
-              manifest.map(c => StreamIngest.relPath(outDir, topic, c.path)))
-            installVersionFile(hfs(spark, outDir), mhDirPath(outDir, topic),
-              version, sigOf(admitted, textCol, Seq("part", "off"))
-                .select(col("sig")))
-            manifest
-          }
-        } finally { admitted.unpersist(); () }
-      },
-      afterWrite = _ => ())
+        StreamIngest.Admission(admitted,
+          install = v => installVersionFile(hfs(spark, outDir),
+            mhDirPath(outDir, topic), v,
+            sigOf(admitted, textCol, Seq("part", "off")).select(col("sig"))),
+          pinned = Seq(admitted))
+      })
   }
 
   /** Embedding NEAR-dup admission gate — the streaming twin of the
@@ -573,77 +561,62 @@ object DedupIngest {
         " which only encodes cosine >= t for t > 0")
     val spark = stream.sparkSession
     NativeExpressions.register(spark)
-    val write = StreamIngest.writerFor(outDir, topic, flushSize, "parquet",
-      "null", prePartitioned = true)
-    StreamIngest.commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = fresh => {
+    StreamIngest.commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
+      StreamIngest.writerFor(outDir, topic, flushSize, "parquet", "null",
+        prePartitioned = true),
+      admit = fresh => {
         // snapshot emptiness, not latestVersion: a remove-only history
         // has versions but no live files, and the empty-corpus answer
         // (admit everything) is the correct one there too
         val liveFiles = CommitLog.snapshot(spark, outDir, topic)
-        // `fresh` is already persisted by commitLoop — derivations
-        // below re-read the cache, not the source. Only the GATED
-        // frame gets its own pin: in the empty-corpus branch admitted
-        // IS fresh, and persisting/unpersisting it here would evict
-        // commitLoop's own cache entry out from under it.
-        val gated =
-          if (liveFiles.isEmpty) None
-          else Some {
-            val corpus = CommitLog
-              .readFiles(spark, outDir, topic, liveFiles)
-              .select(SF.quantize(col(vecCol)).as("cv"))
-            // corpus size for the rows-per-band derivation comes from
-            // the committed NAME ranges — zero IO, no extra corpus
-            // scan per micro-batch (corpus.count() was a second full
-            // read on top of the band-key join). An erasure gap only
-            // overestimates, and the derivation needs magnitude only.
-            val nameRe = graft.ingest.FileNaming.CommittedFilenameRegex.r
-            val estRows = liveFiles.map(_.split('/').last).collect {
-              case nameRe(t, _, s, e, _) if t == topic =>
-                e.toLong - s.toLong + 1
-            }.sum
-            val rows = math.min(maxRows, SF.recommendedRowsPerBand(
-              math.max(1L, estRows), targetBucket))
-            def keysOf(v: Column) =
-              SF.bandedLshKeysQ(v, bands, rows, dims, maxRows)
-            val fq = fresh.withColumn("__qv", SF.quantize(col(vecCol)))
-            val nk = fq.select(col("part"), col("off"), col("__qv"),
-              SF.intDot(col("__qv"), col("__qv")).as("__n2"),
-              explode(keysOf(col("__qv"))).as("k"))
-            val ck = corpus.select(col("cv"), explode(keysOf(col("cv"))).as("k"))
-            val d = call_function("dot_i64", col("__qv"), col("cv"))
-            val dupNew = ck.join(broadcast(nk), Seq("k"))
-              .select(col("part"), col("off"), col("__qv"), col("__n2"),
-                col("cv")).distinct()
-              // d > 0 guards the zero-quantized degenerate: norm 0
-              // makes the RHS 0, and 0 >= 0 would spuriously reject a
-              // vector whose cosine to everything is UNDEFINED. The
-              // batch dedup_embedding_incremental carries the same
-              // dot > 0 guard (its division form would instead throw
-              // DIVIDE_BY_ZERO under Spark's default ANSI mode), so
-              // both gates agree an undefined similarity blocks
-              // nothing.
-              .filter(d > 0 && d.cast("double") >= lit(threshold) *
-                sqrt(col("__n2").cast("double")) *
-                sqrt(SF.intDot(col("cv"), col("cv")).cast("double")))
-              .select(col("part"), col("off")).distinct()
-            fq.join(broadcast(dupNew), Seq("part", "off"), "left_anti")
-              .drop("__qv")
-              .persist() // isEmpty + write would re-run the corpus verify
-          }
-        val admitted = gated.getOrElse(fresh)
-        try {
-          if (admitted.isEmpty) Seq.empty
-          else {
-            val manifest = write(admitted)
-            CommitLog.publish(spark, outDir, topic,
-              manifest.map(c => StreamIngest.relPath(outDir, topic, c.path)))
-            manifest
-          }
-        } finally { gated.foreach(_.unpersist()); () }
-      },
-      afterWrite = _ => ())
+        if (liveFiles.isEmpty) StreamIngest.Admission(fresh)
+        else {
+          val corpus = CommitLog
+            .readFiles(spark, outDir, topic, liveFiles)
+            .select(SF.quantize(col(vecCol)).as("cv"))
+          // corpus size for the rows-per-band derivation comes from
+          // the committed NAME ranges — zero IO, no extra corpus
+          // scan per micro-batch (corpus.count() was a second full
+          // read on top of the band-key join). An erasure gap only
+          // overestimates, and the derivation needs magnitude only.
+          val nameRe = graft.ingest.FileNaming.CommittedFilenameRegex.r
+          val estRows = liveFiles.map(_.split('/').last).collect {
+            case nameRe(t, _, s, e, _) if t == topic =>
+              e.toLong - s.toLong + 1
+          }.sum
+          val rows = math.min(maxRows, SF.recommendedRowsPerBand(
+            math.max(1L, estRows), targetBucket))
+          def keysOf(v: Column) =
+            SF.bandedLshKeysQ(v, bands, rows, dims, maxRows)
+          val fq = fresh.withColumn("__qv", SF.quantize(col(vecCol)))
+          val nk = fq.select(col("part"), col("off"), col("__qv"),
+            SF.intDot(col("__qv"), col("__qv")).as("__n2"),
+            explode(keysOf(col("__qv"))).as("k"))
+          val ck = corpus.select(col("cv"), explode(keysOf(col("cv"))).as("k"))
+          val d = call_function("dot_i64", col("__qv"), col("cv"))
+          val dupNew = ck.join(broadcast(nk), Seq("k"))
+            .select(col("part"), col("off"), col("__qv"), col("__n2"),
+              col("cv")).distinct()
+            // d > 0 guards the zero-quantized degenerate: norm 0
+            // makes the RHS 0, and 0 >= 0 would spuriously reject a
+            // vector whose cosine to everything is UNDEFINED. The
+            // batch dedup_embedding_incremental carries the same
+            // dot > 0 guard (its division form would instead throw
+            // DIVIDE_BY_ZERO under Spark's default ANSI mode), so
+            // both gates agree an undefined similarity blocks
+            // nothing.
+            .filter(d > 0 && d.cast("double") >= lit(threshold) *
+              sqrt(col("__n2").cast("double")) *
+              sqrt(SF.intDot(col("cv"), col("cv")).cast("double")))
+            .select(col("part"), col("off")).distinct()
+          // the writer reads its input twice (the rotation's
+          // first-offset aggregate, then the staging write): pin the
+          // gated frame, or each read re-runs the corpus verify
+          val gated = fq.join(broadcast(dupNew), Seq("part", "off"), "left_anti")
+            .drop("__qv").persist()
+          StreamIngest.Admission(gated, pinned = Seq(gated))
+        }
+      })
   }
 
   /** [[StreamIngest.startLogged]] with the content-dedup admission
@@ -660,11 +633,10 @@ object DedupIngest {
     requireRereadable(format)
     val spark = stream.sparkSession
     reconcileFingerprints(spark, outDir, topic, format)
-    val write = StreamIngest.writerFor(outDir, topic, flushSize, format,
-      avroCodec, prePartitioned = true)
-    StreamIngest.commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = fresh => {
+    StreamIngest.commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
+        prePartitioned = true),
+      admit = fresh => {
         val withFp = fresh.withColumn("__fp", fingerprint(fresh))
         // deterministic in-batch survivor: lowest (part, off) per fp
         val first = withFp.groupBy(col("__fp"))
@@ -674,7 +646,7 @@ object DedupIngest {
         // broadcast: `first` is one row per distinct in-batch fp (the
         // same size class as batchFps below, already broadcast) - and
         // the explicit hint keeps the semi-join from ever re-shuffling
-        // the payload, preserving commitLoop's part-hash for the
+        // the payload, preserving the loop's part-hash for the
         // prePartitioned write
         val survivors = withFp.join(broadcast(first),
           Seq("__fp", "part", "off"), "left_semi")
@@ -684,23 +656,17 @@ object DedupIngest {
         val batchFps = survivors.select(col("__fp").as("fp")).distinct()
         val known = fingerprintIndex(spark, outDir, topic)
           .join(broadcast(batchFps), Seq("fp"), "left_semi").distinct()
+        // the write and the fingerprint install both read the novel
+        // records: pin them
         val novel = survivors
           .join(broadcast(known), survivors("__fp") === known("fp"),
             "left_anti")
           .persist()
-        try {
-          if (novel.isEmpty) Seq.empty
-          else {
-            val novelFps = novel.select(col("__fp").as("fp")).distinct()
-            val manifest = write(novel.drop("__fp"))
-            val version = CommitLog.publish(spark, outDir, topic,
-              manifest.map(c => StreamIngest.relPath(outDir, topic, c.path)))
-            writeFpFile(spark, outDir, topic, version, novelFps)
-            manifest
-          }
-        } finally { novel.unpersist(); () }
-      },
-      afterWrite = _ => ())
+        StreamIngest.Admission(novel.drop("__fp"),
+          install = v => writeFpFile(spark, outDir, topic, v,
+            novel.select(col("__fp").as("fp")).distinct()),
+          pinned = Seq(novel))
+      })
   }
 
   /** Blocklist admission gate: drop any record whose content
@@ -718,8 +684,10 @@ object DedupIngest {
     * subset (true hits + the fpp sliver) is verified against the
     * exact list. Bloom has no false negatives, so nothing blocked can
     * slip through; the exact verify kills false positives, so nothing
-    * clean is over-dropped. The verify join's batch side is tiny and
-    * broadcasts; the blocklist never shuffles for the join.
+    * clean is over-dropped. The verify collects the flagged
+    * fingerprints (bounded by the batch), scans the list for exactly
+    * those, and drops the hits with a literal filter; the blocklist
+    * never shuffles.
     *
     * The blocklist frame (column `fp`: the 16-byte [[fingerprint]]
     * md5) is snapshotted into the sketch at START — a list updated
@@ -763,39 +731,32 @@ object DedupIngest {
         fp => call_function("bloom_might_contain_long",
           lit(blBytes), xxhash64(fp))
       }
-    // broadcast anti-join gate - partitioning preserved (r18)
-    val write = StreamIngest.writerFor(outDir, topic, flushSize, format,
-      avroCodec, prePartitioned = true)
-    StreamIngest.commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = fresh => {
-        val withFp = fresh.withColumn("__fp", fingerprint(fresh))
-        val probe = probeOf(col("__fp"))
-        // exact verify on the flagged sliver only: its distinct fps
-        // are bounded by the batch and BROADCAST into the list (the
-        // blocklist never shuffles — the index-gate idiom); what comes
-        // back is ⊆ batch, so it broadcasts again for the anti-join
-        val flagged = withFp.filter(probe)
-          .select(col("__fp").as("fp")).distinct()
-        // skip the full-list verify scan when the bloom flagged
-        // nothing — the common case per batch; the isEmpty probe is
-        // batch-bounded (fresh is persisted by commitLoop)
+    StreamIngest.commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
+        prePartitioned = true),
+      admit = fresh => {
+        // the flagged probe below and the write both read the batch:
+        // pin it
+        val withFp = fresh.withColumn("__fp", fingerprint(fresh)).persist()
+        def distinctFps(df: DataFrame): Seq[Array[Byte]] =
+          df.collect().map(_.getAs[Array[Byte]](0).toSeq).distinct
+            .map(_.toArray).toSeq
+        // exact verify on the flagged sliver only (true hits plus the
+        // fpp sliver, bounded by the batch): the list is scanned for
+        // exactly those fingerprints and never shuffles, and the scan is
+        // skipped when the bloom flagged nothing — the common case per
+        // batch
+        val flagged = distinctFps(
+          withFp.filter(probeOf(col("__fp"))).select(col("__fp")))
         val blocked =
-          if (flagged.isEmpty) flagged
-          else bl.join(broadcast(flagged), Seq("fp"), "left_semi")
-        val admitted = withFp
-          .join(broadcast(blocked), withFp("__fp") === blocked("fp"),
-            "left_anti").persist()
-        try {
-          if (admitted.isEmpty) Seq.empty
-          else {
-            val manifest = write(admitted.drop("__fp"))
-            CommitLog.publish(spark, outDir, topic,
-              manifest.map(c => StreamIngest.relPath(outDir, topic, c.path)))
-            manifest
-          }
-        } finally { admitted.unpersist(); () }
-      },
-      afterWrite = _ => ())
+          if (flagged.isEmpty) Nil
+          else distinctFps(bl.filter(col("fp").isin(flagged: _*)))
+        // the verdict is a literal filter: partitioning preserved (r18),
+        // and the writer's two reads of it re-read only the pinned batch
+        StreamIngest.Admission(
+          (if (blocked.isEmpty) withFp
+           else withFp.filter(!col("__fp").isin(blocked: _*))).drop("__fp"),
+          pinned = Seq(withFp))
+      })
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ingest.{BatchWriter, CommitLog}
+import graft.ingest.BatchWriter
 import graft.operators.{IvfIndex, KMeans}
 
 /** Streaming ingestion into a SERVED ANN index: embedding vectors
@@ -39,17 +39,7 @@ object IndexIngest {
     val framed = KMeans.assign(stream, cents)
       .select(col("cell").as("part"), col("id").as("off"), col("v"),
         col("cell"))
-    StreamIngest.commitLoop(framed, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, indexDir, IvfIndex.VectorsTopic),
-      writeFn = b =>
-        BatchWriter.write(b, indexDir, IvfIndex.VectorsTopic, flushSize,
-          prePartitioned = true),
-      afterWrite = manifest => {
-        CommitLog.publish(spark, indexDir, IvfIndex.VectorsTopic,
-          manifest.map(c =>
-            StreamIngest.relPath(indexDir, IvfIndex.VectorsTopic, c.path)))
-        ()
-      })
+    ingest(framed, indexDir, IvfIndex.VectorsTopic, checkpoint, flushSize, trigger)
   }
 
   /** The IVF-PQ twin: `(id, v)` vectors assign to their coarse cell,
@@ -68,18 +58,7 @@ object IndexIngest {
     val (books, subDims) = IvfIndex.pqBooks(spark, indexDir,
       IvfIndex.IvfPqCodebooksTopic) // frozen at start
     val framed = IvfIndex.ivfPqEncodeFrame(stream, cents, books, subDims)
-    StreamIngest.commitLoop(framed, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, indexDir,
-        IvfIndex.IvfPqCodesTopic),
-      writeFn = b =>
-        BatchWriter.write(b, indexDir, IvfIndex.IvfPqCodesTopic, flushSize,
-          prePartitioned = true),
-      afterWrite = manifest => {
-        CommitLog.publish(spark, indexDir, IvfIndex.IvfPqCodesTopic,
-          manifest.map(c =>
-            StreamIngest.relPath(indexDir, IvfIndex.IvfPqCodesTopic, c.path)))
-        ()
-      })
+    ingest(framed, indexDir, IvfIndex.IvfPqCodesTopic, checkpoint, flushSize, trigger)
   }
 
   /** The PQ twin: `(id, v)` vectors encode to M codes under the
@@ -94,16 +73,15 @@ object IndexIngest {
     val spark = stream.sparkSession
     val (books, subDims) = IvfIndex.pqBooks(spark, indexDir) // frozen
     val framed = IvfIndex.pqEncodeFrame(stream, books, subDims, parts)
-    StreamIngest.commitLoop(framed, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, indexDir, IvfIndex.PqCodesTopic),
-      writeFn = b =>
-        BatchWriter.write(b, indexDir, IvfIndex.PqCodesTopic, flushSize,
-          prePartitioned = true),
-      afterWrite = manifest => {
-        CommitLog.publish(spark, indexDir, IvfIndex.PqCodesTopic,
-          manifest.map(c =>
-            StreamIngest.relPath(indexDir, IvfIndex.PqCodesTopic, c.path)))
-        ()
-      })
+    ingest(framed, indexDir, IvfIndex.PqCodesTopic, checkpoint, flushSize, trigger)
   }
+
+  /** Commit an encoded `(part, off, ...)` frame into one index topic
+    * through the logged commit loop. */
+  private def ingest(framed: DataFrame, indexDir: String, topic: String,
+                     checkpoint: String, flushSize: Int,
+                     trigger: Option[Trigger]): StreamingQuery =
+    StreamIngest.commitLoop(framed, checkpoint, trigger, indexDir, Left(topic),
+      b => BatchWriter.write(b, indexDir, topic, flushSize,
+        prePartitioned = true))
 }

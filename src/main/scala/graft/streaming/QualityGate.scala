@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.NativeExpressions
-import graft.ingest.CommitLog
 import graft.operators.LinearClassifier
 
 /** Model-in-the-loop quality admission: [[StreamIngest.startLogged]]
@@ -54,23 +53,12 @@ object QualityGate {
       s"quality gate needs a `$textCol` column, got: " +
         stream.columns.mkString(", "))
     val margin = LinearClassifier.scoreLiteral(col(textCol), weights, buckets)
-    // filter-only gate - partitioning preserved (r18)
-    val write = StreamIngest.writerFor(outDir, topic, flushSize, format,
-      avroCodec, prePartitioned = true)
-    StreamIngest.commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = fresh => {
-        // scan-side projection filter — fresh is already persisted by
-        // commitLoop, so no extra pin is needed for isEmpty + write
-        val admitted = fresh.filter(margin >= lit(minMargin))
-        if (admitted.isEmpty) Seq.empty
-        else {
-          val manifest = write(admitted)
-          CommitLog.publish(spark, outDir, topic,
-            manifest.map(c => StreamIngest.relPath(outDir, topic, c.path)))
-          manifest
-        }
-      },
-      afterWrite = _ => ())
+    // a scan-side filter: partitioning preserved (r18), and only the
+    // write reads it, so nothing is pinned
+    StreamIngest.commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
+        prePartitioned = true),
+      admit = fresh =>
+        StreamIngest.Admission(fresh.filter(margin >= lit(minMargin))))
   }
 }

@@ -20,11 +20,40 @@ import graft.schema.SchemaEvolution
   *  - retry w/ backoff (A22)             → batch replay from checkpoint
   *  - rebalance open/close (A23)         → Spark scheduler internal
   *
-  * Exactly-once: each micro-batch first drops offsets at or below the
-  * committed maximum recovered FROM FILENAMES (the reference's own
-  * source of truth, `FileUtils.java:106-149`), then commits via atomic
-  * renames. A replayed batch after a crash re-filters to nothing — the
+  * ONE commit loop serves every `start*` entry point of this package,
+  * as the reference's one `TopicPartitionWriter` state machine serves
+  * every partition `DataWriter.write` demultiplexes to
+  * (`DataWriter.java:347-353`). It is keyed by (topic, part): a
+  * single-topic stream is the constant-topic case, a multi-topic
+  * stream carries a `topic` column. Per micro-batch it runs, each step
+  * once: one payload exchange by the key and the batch-local offset
+  * dedup → the resume filter (drop offsets at or below the committed
+  * maximum) → the admission filter, if any → the caller's writer (the
+  * atomic-rename commit) → for each topic in the manifest, the log
+  * publish, with a log checkpoint every 64 versions, then the
+  * admission's side-plane install under the published version, then
+  * post-publish hooks (views, Hive partitions) → the in-memory offset
+  * advance. A replayed batch after a crash re-filters to nothing — the
   * same idempotent-redo contract as `FSWAL.apply`.
+  *
+  * Offsets are recovered once, at query start: from the commit log
+  * (logged loops), or from committed FILENAMES — the reference's own
+  * source of truth, `FileUtils.java:106-149` — for the unlogged
+  * [[start]], which publishes nothing.
+  *
+  * An admission filter (the `DedupIngest`, `QualityGate` and
+  * `CardinalityMonitor` gates) must be deterministic in the record, so
+  * a replayed record meets the same verdict, and must preserve the
+  * batch's partitioning — filters, projections and broadcast joins
+  * only — because the writer stages without a second exchange
+  * (`prePartitioned`). Pinning follows one rule: the loop pins
+  * nothing, the writer pins its own sized frame, and a filter that
+  * reads its input in more than one action pins it itself and hands
+  * the pinned frame back for release. The single-topic writers read
+  * their input twice before their own pin (the rotation's first-offset
+  * aggregate, then the staging write), so a filter whose admitted
+  * frame is costly to recompute (an index or corpus probe) pins that
+  * frame as well.
   */
 object StreamIngest {
 
@@ -35,16 +64,30 @@ object StreamIngest {
     * and then maintained incrementally from each batch's commit
     * manifest — the recursive directory listing does not re-run per
     * micro-batch, so its cost no longer grows with total file count.
-    * A restart re-lists, which is exactly the crash-recovery contract. */
+    * A restart re-lists, which is exactly the crash-recovery contract.
+    *
+    * @param trigger the commit cadence. A processing-time trigger is
+    *   A13's wallclock scheduled rotation (`rotate.schedule.interval.ms`,
+    *   `TopicPartitionWriter.java:297-310`): a micro-batch holding
+    *   FEWER than `flushSize` records still commits its file when the
+    *   schedule fires — the partial-file flush of
+    *   `DataWriterAvroTest.java:356-403`. Day alignment: Spark's
+    *   ProcessingTime trigger fires at epoch-aligned multiples of the
+    *   period; the epoch is anchored at UTC midnight, so for periods
+    *   dividing 24h these are exactly the reference's midnight-anchored
+    *   fire times (`Rotation.nextTimeAdjustedByDay` — equivalence
+    *   property-tested in RotationSpec). Periods that do not divide a
+    *   day re-anchor at each midnight in the reference; pick a divisor
+    *   period (the reference's own default configs do) to keep the
+    *   contracts equal. The logged entry points take the same trigger. */
   def start(stream: DataFrame, outDir: String, topic: String, flushSize: Int,
             checkpoint: String, trigger: Option[Trigger] = None,
             format: String = "parquet",
             avroCodec: String = "null"): StreamingQuery =
-    commitLoop(stream, checkpoint, trigger,
-      initial = BatchWriter.maxCommittedOffsets(stream.sparkSession, outDir, topic),
-      writeFn = writerFor(outDir, topic, flushSize, format, avroCodec,
+    commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
+      writerFor(outDir, topic, flushSize, format, avroCodec,
         prePartitioned = true),
-      afterWrite = _ => ())
+      logged = false)
 
   /** The per-batch committer for a (format, codec) choice — B1's Avro
     * writes through [[AvroSink]] (the reference's default on-disk
@@ -74,74 +117,104 @@ object StreamIngest {
     p.stripPrefix(root).stripPrefix("/")
   }
 
+  /** The log-checkpoint cadence, in versions, of every logged loop. */
+  private val LogCheckpointEvery = 64
+
   /** Publish one batch's committed files as a log version, then rebase
-    * snapshot replay on a [[CommitLog.checkpoint]] every `every`
-    * versions, so a year-old topic's reads and restarts stay O(tail),
-    * not O(every version ever published). The cadence every logged
-    * loop shares. */
+    * snapshot replay on a [[CommitLog.checkpoint]] every
+    * [[LogCheckpointEvery]] versions, so a year-old topic's reads and
+    * restarts stay O(tail), not O(every version ever published).
+    * Returns the published version. */
   private def publishBatch(spark: SparkSession, outDir: String, topic: String,
-                           rels: Seq[String], every: Int): Unit = {
+                           rels: Seq[String]): Long = {
     val v = CommitLog.publish(spark, outDir, topic, rels)
-    if (every > 0 && v > 0 && v % every == 0) CommitLog.checkpoint(spark, outDir, topic)
-    ()
+    if (v > 0 && v % LogCheckpointEvery == 0) CommitLog.checkpoint(spark, outDir, topic)
+    v
   }
 
-  /** The foreachBatch query scaffolding every commit loop shares:
-    * checkpoint + optional trigger + start. */
-  private[streaming] def batchQuery(stream: DataFrame, checkpoint: String,
-                         trigger: Option[Trigger])
-                        (body: DataFrame => Unit): StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-    trigger.foreach(writer.trigger)
-    writer.foreachBatch { (batch: DataFrame, _: Long) => body(batch) }.start()
-  }
+  /** An admission filter's verdict on one micro-batch: the frame to
+    * write; the side-plane record to install under the log version the
+    * batch's publish returned (a fingerprint file, MinHash signatures,
+    * a KMV sketch — run only when the batch published); and the frames
+    * the filter pinned, released once the batch is done. */
+  private[streaming] final case class Admission(
+      admitted: DataFrame,
+      install: Long => Unit = _ => (),
+      pinned: Seq[DataFrame] = Nil)
 
-  /** The shared micro-batch commit loop: dedup → resume-filter →
-    * write → (hook) → advance offsets. `writeFn` is the batch
-    * committer (BatchWriter / AvroSink / a config's full dispatch);
-    * `afterWrite` runs after the batch's files are durably renamed and
-    * before the in-memory offsets advance — the logged path publishes
-    * there. */
+  /** The one micro-batch commit loop (see the object scaladoc).
+    *
+    * `topic` keys the stream: `Left(t)` is one constant topic (the
+    * frame carries no routing column — a payload column named `topic`
+    * is content); `Right(prepare)` routes by the frame's `topic`
+    * column after `prepare` ran on the raw batch, which may assign it
+    * (SMT routers, dead-letter routing, tiering) and must then be
+    * deterministic in the record: replay correctness hangs on a
+    * replayed record re-routing to the topic whose log already holds
+    * it. `write` commits the admitted frame under `root` and returns
+    * the manifest; `logged = false` (the constant-topic [[start]]
+    * only) recovers from filenames and publishes nothing.
+    * `afterPublish` runs per topic after its publish and install. */
   private[streaming] def commitLoop(stream: DataFrame, checkpoint: String,
-                         trigger: Option[Trigger],
-                         initial: Map[Long, Long],
-                         writeFn: DataFrame => Seq[BatchWriter.CommittedFile],
-                         afterWrite: Seq[BatchWriter.CommittedFile] => Unit): StreamingQuery = {
-    var committed = initial
-    batchQuery(stream, checkpoint, trigger) { batch =>
-      // ONE payload exchange per micro-batch (r18): hash the batch by
-      // `part` up front, then every downstream step rides that
-      // clustering — the offset dedup (keyed (part, off) ⊇ part), the
-      // rotation's first-offset aggregate/broadcast-join, the staging
-      // write (writerFor passes prePartitioned=true so the staging
-      // job's repartition is skipped) and the manifest aggregate. The
-      // per-partition serialization this implies is the reference's
-      // own model: one TopicPartitionWriter per Kafka partition.
-      // batch-local offset dedup: an at-least-once upstream can hand
-      // the SAME (part, off) twice within one micro-batch, which the
-      // committed-offset filter alone cannot catch
-      val deduped = batch.repartition(col("part"))
-        .dropDuplicates("part", "off")
-      // pin the filtered batch: the write's staging/manifest jobs
-      // would otherwise re-read the source twice
-      val fresh = BatchWriter.resumeFrom(deduped, committed).persist()
-      try {
-        // no isEmpty pre-probe (r17): it cost one extra job on EVERY
-        // batch to optimize only the fully-replayed-batch case, which
-        // the writer handles anyway — an empty staging write commits
-        // nothing and returns an empty manifest, and the manifest
-        // guard keeps afterWrite (log publish, views) from seeing a
-        // no-op batch, exactly as the old branch did.
-        val manifest = writeFn(fresh)
-        if (manifest.nonEmpty) {
-          afterWrite(manifest)
-          committed = manifest.foldLeft(committed) { (m, f) =>
-            m.updated(f.partition, math.max(m.getOrElse(f.partition, -1L), f.endOffset))
-          }
-        }
-      } finally { fresh.unpersist(); () }
+                         trigger: Option[Trigger], root: String,
+                         topic: Either[String, DataFrame => DataFrame],
+                         write: DataFrame => Seq[BatchWriter.CommittedFile],
+                         logged: Boolean = true,
+                         admit: DataFrame => Admission = Admission(_),
+                         afterPublish: (String, Seq[BatchWriter.CommittedFile]) => Unit =
+                           (_, _) => ()): StreamingQuery = {
+    require(logged || topic.isLeft, "multi-topic streams commit through the log")
+    val spark = stream.sparkSession
+    // recover-on-start: every logged topic under the root for a routed
+    // stream — a topic with no log starts empty and advances from its
+    // manifests below. The one-writer-per-topic discipline is what
+    // makes this exact: no other writer grows a topic's log behind the
+    // running query.
+    var committed: Map[String, Map[Long, Long]] = topic match {
+      case Left(t) if logged => Map(t -> CommitLog.maxOffsets(spark, root, t))
+      case Left(t) => Map(t -> BatchWriter.maxCommittedOffsets(spark, root, t))
+      case Right(_) => CommitLog.topics(spark, root)
+        .map(t => t -> CommitLog.maxOffsets(spark, root, t)).toMap
     }
+    val keys = if (topic.isLeft) Seq("part") else Seq("topic", "part")
+    val prepare = topic.fold(_ => identity[DataFrame] _, p => p)
+    val writer = stream.writeStream.option("checkpointLocation", checkpoint)
+    trigger.foreach(writer.trigger)
+    writer.foreachBatch { (batch: DataFrame, _: Long) =>
+      // ONE payload exchange per micro-batch (r18): hash the batch by
+      // the key up front, then every downstream step rides that
+      // clustering — the offset dedup (keyed ⊇ the key), the resume
+      // filter, the admission filter, the rotation's first offset, the
+      // staging write (the writers pass prePartitioned=true so the
+      // staging job's repartition is skipped) and the manifest
+      // aggregate. The per-partition serialization this implies is the
+      // reference's own model: one TopicPartitionWriter per Kafka
+      // partition. The batch-local dedup catches an at-least-once
+      // upstream handing the SAME offset twice within one micro-batch,
+      // which the committed-offset filter alone cannot.
+      val fresh = BatchWriter.resumeFrom(
+        prepare(batch).repartition(keys.map(col): _*)
+          .dropDuplicates(keys :+ "off"),
+        committed, byTopic = topic.isRight)
+      val gate = admit(fresh)
+      try {
+        // no isEmpty pre-probe (r17): an all-replayed or all-rejected
+        // batch stages nothing and yields an empty manifest, so no
+        // topic group below runs — no publish, no install, no hook
+        write(gate.admitted).groupBy(_.topic).toSeq.sortBy(_._1)
+          .foreach { case (t, files) =>
+            if (logged)
+              gate.install(publishBatch(spark, root, t,
+                files.map(c => relPath(root, t, c.path))))
+            afterPublish(t, files)
+            committed = committed.updated(t,
+              files.foldLeft(committed.getOrElse(t, Map.empty[Long, Long])) {
+                (m, f) => m.updated(f.partition,
+                  math.max(m.getOrElse(f.partition, -1L), f.endOffset))
+              })
+          }
+      } finally gate.pinned.foreach(_.unpersist())
+    }.start()
   }
 
   /** [[start]] with the transactional metadata-log commit: each
@@ -160,16 +233,10 @@ object StreamIngest {
                   flushSize: Int, checkpoint: String,
                   trigger: Option[Trigger] = None,
                   format: String = "parquet",
-                  avroCodec: String = "null",
-                  logCheckpointEvery: Int = LogCheckpointEvery): StreamingQuery = {
-    val spark = stream.sparkSession
-    commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = writerFor(outDir, topic, flushSize, format, avroCodec,
-        prePartitioned = true),
-      afterWrite = manifest => publishBatch(spark, outDir, topic,
-        manifest.map(c => relPath(outDir, topic, c.path)), logCheckpointEvery))
-  }
+                  avroCodec: String = "null"): StreamingQuery =
+    commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
+      writerFor(outDir, topic, flushSize, format, avroCodec,
+        prePartitioned = true))
 
   /** [[startLogged]] plus the reference's LIVE Hive sync
     * (`DataWriter.java:383-420` bootstrap + the first-write
@@ -187,19 +254,17 @@ object StreamIngest {
                       flushSize: Int, checkpoint: String, table: String,
                       database: Option[String] = None,
                       trigger: Option[Trigger] = None,
-                      format: String = "parquet",
-                      logCheckpointEvery: Int = LogCheckpointEvery): StreamingQuery = {
+                      format: String = "parquet"): StreamingQuery = {
     val spark = stream.sparkSession
-    val initial = CommitLog.maxOffsets(spark, outDir, topic)
     var tableReady = false
     // partitions already in the catalog: everything the log already
     // covers (restart path — their dirs exist), then grow per batch
-    val registered = scala.collection.mutable.Set.empty[Long] ++ initial.keys
-    val write = writerFor(outDir, topic, flushSize, format, "null",
+    val registered = scala.collection.mutable.Set.empty[Long] ++
+      CommitLog.maxOffsets(spark, outDir, topic).keys
+    val commit = writerFor(outDir, topic, flushSize, format, "null",
       prePartitioned = true)
-    commitLoop(stream, checkpoint, trigger,
-      initial = initial,
-      writeFn = batch => {
+    commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
+      write = batch => {
         if (!tableReady) {
           database.foreach(TableCatalog.createDatabase(spark, _))
           TableCatalog.createExternalTable(spark, table, s"$outDir/$topic",
@@ -211,18 +276,15 @@ object StreamIngest {
             TableCatalog.syncPartitions(spark, table, database)
           tableReady = true
         }
-        write(batch)
+        commit(batch)
       },
-      afterWrite = manifest => {
-        publishBatch(spark, outDir, topic,
-          manifest.map(c => relPath(outDir, topic, c.path)), logCheckpointEvery)
-        manifest.map(_.partition).distinct.filterNot(registered).foreach { p =>
+      afterPublish = (_, files) =>
+        files.map(_.partition).distinct.filterNot(registered).foreach { p =>
           TableCatalog.addPartition(spark, table, Map("partition" -> p),
             database)
           registered += p
           ()
-        }
-      })
+        })
   }
 
   /** [[startLogged]] plus always-fresh materialized views: after each
@@ -238,20 +300,12 @@ object StreamIngest {
                            views: Seq[graft.ingest.MaterializedAgg.ViewDef],
                            trigger: Option[Trigger] = None,
                            format: String = "parquet",
-                           avroCodec: String = "null",
-                           logCheckpointEvery: Int = LogCheckpointEvery): StreamingQuery = {
-    val spark = stream.sparkSession
-    commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = writerFor(outDir, topic, flushSize, format, avroCodec,
+                           avroCodec: String = "null"): StreamingQuery =
+    commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
+      writerFor(outDir, topic, flushSize, format, avroCodec,
         prePartitioned = true),
-      afterWrite = manifest => {
-        publishBatch(spark, outDir, topic,
-          manifest.map(c => relPath(outDir, topic, c.path)), logCheckpointEvery)
-        graft.ingest.MaterializedAgg.refreshAll(spark, outDir, topic,
-          views, format)
-      })
-  }
+      afterPublish = (_, _) => graft.ingest.MaterializedAgg.refreshAll(
+        stream.sparkSession, outDir, topic, views, format))
 
   /** Restart schema re-inference — the reference's recover-time
     * re-read of the current schema from the latest committed file
@@ -428,18 +482,11 @@ object StreamIngest {
     val reproject = recoveryProjector(spark, root, topic, cfg)
     // SMTs run FIRST (the Connect runtime applies transforms before
     // the sink), then schema recovery projects the transformed shape
-    commitLoop(stream, checkpoint, cfgTrigger(cfg),
-      initial = CommitLog.maxOffsets(spark, root, topic),
-      writeFn = b => Retry.withBackoff(2, cfg.retryBackoffMs)(
+    commitLoop(stream, checkpoint, cfgTrigger(cfg), root, Left(topic),
+      b => Retry.withBackoff(2, cfg.retryBackoffMs)(
         cfg.write(reproject(cfg.applySmts(b, includeRouters = false)),
-          outDir, topic)),
-      afterWrite = manifest => publishBatch(spark, root, topic,
-        manifest.map(c => relPath(root, topic, c.path)), LogCheckpointEvery))
+          outDir, topic)))
   }
-
-  /** The default log-checkpoint cadence, in versions, of every logged
-    * loop (the config-driven overloads take no argument for it). */
-  private val LogCheckpointEvery = 64
 
   /** [[startLogged]] against the configured store root — the streaming
     * consumer of `store.url`/`hdfs.url` (same precedence as
@@ -552,10 +599,9 @@ object StreamIngest {
     * single consumer pass (`DataWriter.java:347-353`: group records by
     * TopicPartition, buffer into each partition's
     * `TopicPartitionWriter`). The Spark-native equivalent: ONE
-    * streaming query whose micro-batch is pinned once, then sliced
-    * per-topic over the cached partitions — N topics never mean N
-    * source scans or N concurrent queries, and the stream checkpoint
-    * advances all topics together.
+    * streaming query through the one commit loop, keyed (topic, part)
+    * — N topics never mean N source scans or N concurrent queries, and
+    * the stream checkpoint advances all topics together.
     *
     * Per-topic isolation matches the reference's
     * writer-per-TopicPartition model: each topic keeps its OWN commit
@@ -621,92 +667,51 @@ object StreamIngest {
                            scala.None,
                        views: Map[String,
                          Seq[graft.ingest.MaterializedAgg.ViewDef]] =
-                           Map.empty,
-                       logCheckpointEvery: Int = LogCheckpointEvery)
+                           Map.empty)
       : StreamingQuery = {
     require(rotationBucket.isEmpty || perTopicProjection.isEmpty,
       "per-topic schema projection writes through the per-topic " +
         "fan-out, which does not rotate; run rotated+projected topics " +
         "through the single-topic overload")
-    val spark = stream.sparkSession
-    // recover-on-start for every logged topic under the root (see the
-    // scaladoc); topics first committed by this query enter from their
-    // manifests below
-    var committed: Map[String, Map[Long, Long]] =
-      CommitLog.topics(spark, outDir)
-        .map(t => t -> CommitLog.maxOffsets(spark, outDir, t)).toMap
+    def retried(w: => Seq[BatchWriter.CommittedFile]) =
+      Retry.withBackoff(writeRetries, retryBackoffMs)(w)
     // avro cannot join the dynamic-partitioned staging job; per-topic
     // schema projection makes slices structurally DIFFERENT frames —
-    // both take the per-topic fan-out
-    val fanOut = format == "avro" || perTopicProjection.isDefined
-    batchQuery(stream, checkpoint, trigger) { batch =>
-      // one dedup keyed (topic, part, off) — offsets are per-topic
-      // sequences, so the same (part, off) on two topics is two
-      // distinct records. `prepare` runs first: a router that ASSIGNS
-      // the topic column per batch (TierRouter) must be deterministic
-      // in the record — replay correctness hangs on a replayed record
-      // re-routing to the topic whose log already holds it.
-      // ONE payload exchange per micro-batch (r18, same shape as the
-      // single-topic loop): hash by (topic, part) up front; the dedup,
-      // the resume filter, the rotation windows, the staging write
-      // (prePartitioned below) and the manifest aggregate all ride it.
-      // No pin here: the staging write pins its own input for the
-      // manifest (BatchWriter.stageAndCommit).
-      val fresh = BatchWriter.resumeFromMulti(
-        prepare(batch).repartition(col("topic"), col("part"))
-          .dropDuplicates("topic", "part", "off"),
-        committed)
-      // no isEmpty pre-probe (r17) — same reasoning as the
-      // single-topic loop: an all-replayed batch stages nothing and
-      // yields an empty manifest, and the per-topic publish loop below
-      // iterates zero groups.
-      val manifest =
-        if (fanOut) {
-          // the per-topic fan-out reads the batch once per topic: pin
-          // it, and collect its topic roster
-          val pinned = fresh.persist()
-          try {
-            val topics = pinned.select("topic").distinct()
-              .collect().map(_.getString(0)).sorted.toSeq
-            Retry.withBackoff(writeRetries, retryBackoffMs)(topics.flatMap { t =>
-              val slice0 = pinned.filter(col("topic") === t).drop("topic")
-              val slice = perTopicProjection
-                .map(p => p(t)(slice0)).getOrElse(slice0)
-              if (slice.isEmpty) Seq.empty
-              else if (format == "avro")
-                // rotation rides the per-topic fan-out: the bucket
-                // expression reads the slice's record-time column
-                // (still present — only `topic` was dropped)
-                AvroSink.write(slice, outDir, t, flushSize, pad,
-                  avroCodec, rotationBucket)
-              else
-                BatchWriter.write(slice, outDir, t, flushSize, pad, format)
-            })
-          } finally { pinned.unpersist(); () }
-        } else Retry.withBackoff(writeRetries, retryBackoffMs)(
-          BatchWriter.writeMulti(fresh, outDir, flushSize, pad, format,
-            rotationBucket, rotationDrop, prePartitioned = true))
-      manifest.groupBy(_.topic).toSeq.sortBy(_._1)
-        .foreach { case (topic, files) =>
-          publishBatch(spark, outDir, topic, files.map { c =>
-            s"partition=${c.partition}/" +
-              new org.apache.hadoop.fs.Path(c.path).getName
-          }, logCheckpointEvery)
-          committed = committed.updated(topic,
-            files.foldLeft(committed.getOrElse(topic, Map.empty[Long, Long])) {
-              (m, f) => m.updated(f.partition,
-                math.max(m.getOrElse(f.partition, -1L), f.endOffset))
-            })
-          // per-topic materialized views: refresh AFTER this topic's
-          // data publish (same ordering contract as
-          // startLoggedWithViews — a crash mid-refresh leaves the view
-          // stale, and its filename watermark back-fills it exactly on
-          // the topic's next batch)
-          views.get(topic).foreach(vs =>
-            graft.ingest.MaterializedAgg.refreshAll(
-              spark, outDir, topic, vs, format))
-        }
-    }
+    // both take the per-topic fan-out, which reads the batch once per
+    // topic: it pins the batch and collects its topic roster. Every
+    // rostered topic has rows and projection never filters, so no
+    // slice is probed for emptiness.
+    val write: DataFrame => Seq[BatchWriter.CommittedFile] =
+      if (format == "avro" || perTopicProjection.isDefined) fresh => {
+        val pinned = fresh.persist()
+        try {
+          val topics = pinned.select("topic").distinct()
+            .collect().map(_.getString(0)).sorted.toSeq
+          retried(topics.flatMap { t =>
+            val slice0 = pinned.filter(col("topic") === t).drop("topic")
+            val slice = perTopicProjection
+              .map(p => p(t)(slice0)).getOrElse(slice0)
+            if (format == "avro")
+              // rotation rides the per-topic fan-out: the bucket
+              // expression reads the slice's record-time column
+              // (still present — only `topic` was dropped)
+              AvroSink.write(slice, outDir, t, flushSize, pad,
+                avroCodec, rotationBucket)
+            else
+              BatchWriter.write(slice, outDir, t, flushSize, pad, format)
+          })
+        } finally { pinned.unpersist(); () }
+      } else fresh => retried(
+        BatchWriter.writeMulti(fresh, outDir, flushSize, pad, format,
+          rotationBucket, rotationDrop, prePartitioned = true))
+    // per-topic materialized views refresh AFTER that topic's data
+    // publish (the startLoggedWithViews ordering contract — a crash
+    // mid-refresh leaves the view stale, and its filename watermark
+    // back-fills it exactly on the topic's next batch)
+    commitLoop(stream, checkpoint, trigger, outDir, Right(prepare), write,
+      afterPublish = (t, _) => views.get(t).foreach(vs =>
+        graft.ingest.MaterializedAgg.refreshAll(
+          stream.sparkSession, outDir, t, vs, format)))
   }
 
   /** Dead-letter routing — the Kafka Connect runtime's
@@ -738,36 +743,6 @@ object StreamIngest {
       prepare = _.withColumn("topic",
         when(isValid, lit(topic)).otherwise(lit(s"$topic.dlq"))))
   }
-
-  /** A13 — wallclock scheduled rotation in the streaming plane
-    * (`rotate.schedule.interval.ms`, `TopicPartitionWriter.java:297-310`
-    * + partial-file flush test `DataWriterAvroTest.java:356-403`): the
-    * commit cadence is a processing-time trigger at `periodMs`, and a
-    * micro-batch holding FEWER than `flushSize` records still commits
-    * its file when the schedule fires — the partial-file flush the
-    * reference tests.
-    *
-    * Day alignment: Spark's ProcessingTime trigger fires at
-    * epoch-aligned multiples of the period; the epoch is anchored at
-    * UTC midnight, so for periods dividing 24h these are exactly the
-    * reference's midnight-anchored fire times
-    * (`Rotation.nextTimeAdjustedByDay` — equivalence property-tested
-    * in RotationSpec). Periods that do not divide a day re-anchor at
-    * each midnight in the reference; pick a divisor period (the
-    * reference's own default configs do) to keep the contracts equal. */
-  def startScheduled(stream: DataFrame, outDir: String, topic: String,
-                     flushSize: Int, checkpoint: String,
-                     periodMs: Long): StreamingQuery =
-    start(stream, outDir, topic, flushSize, checkpoint,
-      Some(Trigger.ProcessingTime(periodMs)))
-
-  /** [[startScheduled]] through the transactional commit log: the
-    * schedule-fired partial file is published as an atomic version. */
-  def startScheduledLogged(stream: DataFrame, outDir: String, topic: String,
-                           flushSize: Int, checkpoint: String,
-                           periodMs: Long): StreamingQuery =
-    startLogged(stream, outDir, topic, flushSize, checkpoint,
-      Some(Trigger.ProcessingTime(periodMs)))
 
   /** Event-time bucketing with late-data handling (A12's semantics:
     * a time bucket closes only once a later record advances the clock —

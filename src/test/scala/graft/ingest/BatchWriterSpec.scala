@@ -53,12 +53,12 @@ class BatchWriterSpec extends SparkSuite {
     // resume: replayed batch with old + new offsets → only new pass
     val replay = (for (p <- Seq(0L, 1L); o <- 3L to 6L)
       yield (p, o, s"payload-$p-$o")).toDF("part", "off", "payload")
-    val fresh = BatchWriter.resumeFrom(replay, maxOffs)
+    val fresh = BatchWriter.resumeFrom(replay, Map("events" -> maxOffs))
     assert(fresh.select(col("part"), col("off")).as[(Long, Long)].collect().toSet ===
       Set((0L, 5L), (0L, 6L), (1L, 5L), (1L, 6L)))
     // an unseen partition passes through untouched
     val newPart = Seq((9L, 0L, "x")).toDF("part", "off", "payload")
-    assert(BatchWriter.resumeFrom(newPart, maxOffs).count() === 1)
+    assert(BatchWriter.resumeFrom(newPart, Map("events" -> maxOffs)).count() === 1)
   }
 
   test("writeMulti: one staging pass, per-topic committed layout + resume filter") {
@@ -84,9 +84,9 @@ class BatchWriterSpec extends SparkSuite {
     assert(!new java.io.File(s"$out/+tmp").exists() ||
       new java.io.File(s"$out/+tmp").listFiles().isEmpty)
 
-    // resumeFromMulti: per-topic maps filter independently in one join
-    val fresh = BatchWriter.resumeFromMulti(df,
-      Map("alpha" -> Map(0L -> 2L), "beta" -> Map(0L -> 4L)))
+    // resumeFrom(byTopic): per-topic maps filter independently in one join
+    val fresh = BatchWriter.resumeFrom(df,
+      Map("alpha" -> Map(0L -> 2L), "beta" -> Map(0L -> 4L)), byTopic = true)
     assert(fresh.select(col("topic"), col("off")).as[(String, Long)]
       .collect().toSet === Set(("alpha", 3L), ("alpha", 4L)))
   }

@@ -917,9 +917,9 @@ class CommitLogSpec extends SparkSuite {
     val s = MemoryStream[(Long, Long, String)]
     // flushSize 5 but only 2 records: the schedule fire must flush AND
     // publish the partial file as a log version (A13 through the log)
-    val q = graft.streaming.StreamIngest.startScheduledLogged(
+    val q = graft.streaming.StreamIngest.startLogged(
       s.toDF().toDF("part", "off", "payload"), out, "t", flushSize = 5, ckpt,
-      periodMs = 200L)
+      Some(org.apache.spark.sql.streaming.Trigger.ProcessingTime(200L)))
     s.addData((0L, 0L, "a"), (0L, 1L, "b"))
     q.processAllAvailable()
     q.stop()
@@ -1086,22 +1086,27 @@ class CommitLogSpec extends SparkSuite {
     val f = CommitLog.fs(spark, out)
     assert(f.exists(new Path(s"$out/t/_commitlog/$v.ckpt")))
     assert(CommitLog.read(spark, out, "t").count() === 6)
-    // streaming: every Nth published version checkpoints the log
+    // streaming: every 64th published version checkpoints the log — a
+    // 63-version history (offsets 0..62, one file each), then two
+    // micro-batches publish versions 63 and 64
+    BatchWriter.write((0L until 63L).map(o => (0L, o, s"p$o"))
+        .toDF("part", "off", "payload"), out, "u", flushSize = 1)
+      .map(c => s"partition=0/${new Path(c.path).getName}").sorted
+      .foreach(rel => CommitLog.publish(spark, out, "u", Seq(rel)))
     implicit val sqlCtx = spark.sqlContext
     val ckpt = Files.createTempDirectory("clog-ckpt-sckpt").toString
     val s = MemoryStream[(Long, Long, String)]
     val q = graft.streaming.StreamIngest.startLogged(
-      s.toDF().toDF("part", "off", "payload"), out, "u", flushSize = 10, ckpt,
-      logCheckpointEvery = 2)
-    (0 until 5).foreach { i =>
+      s.toDF().toDF("part", "off", "payload"), out, "u", flushSize = 10, ckpt)
+    (63 until 65).foreach { i =>
       s.addData((0L, i.toLong, s"p$i"))
       q.processAllAvailable()
     }
     q.stop()
-    assert(CommitLog.latestVersion(spark, out, "u") === 4L)
-    assert(f.exists(new Path(s"$out/u/_commitlog/2.ckpt")))
-    assert(f.exists(new Path(s"$out/u/_commitlog/4.ckpt")))
-    assert(CommitLog.read(spark, out, "u").count() === 5)
+    assert(CommitLog.latestVersion(spark, out, "u") === 64L)
+    assert(!f.exists(new Path(s"$out/u/_commitlog/63.ckpt")))
+    assert(f.exists(new Path(s"$out/u/_commitlog/64.ckpt")))
+    assert(CommitLog.read(spark, out, "u").count() === 65)
   }
 
   test("diffFiles shows churn; diffRows is the compaction-invariant logical change feed") {

@@ -122,10 +122,11 @@ class RotationSpec extends SparkSuite {
   }
 
   test("epoch-aligned trigger fire times equal the day-aligned schedule for divisor periods") {
-    // StreamIngest.startScheduled relies on this: Spark's ProcessingTime
-    // trigger aligns batches to epoch multiples of the period, and the
-    // epoch is anchored at UTC midnight — so for any period dividing
-    // 24h the fire grid is exactly nextTimeAdjustedByDay's.
+    // StreamIngest.start's processing-time trigger relies on this:
+    // Spark's ProcessingTime trigger aligns batches to epoch multiples
+    // of the period, and the epoch is anchored at UTC midnight — so for
+    // any period dividing 24h the fire grid is exactly
+    // nextTimeAdjustedByDay's.
     val utc = ZoneId.of("UTC")
     val periods = Seq(60000L, 900000L, 3600000L, 7200000L, 21600000L, 86400000L)
     val rnd = new scala.util.Random(13)

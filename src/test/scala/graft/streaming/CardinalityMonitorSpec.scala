@@ -158,6 +158,32 @@ class CardinalityMonitorSpec extends SparkSuite {
     assert(rebuilt === 40L)
   }
 
+  test("a restart fed only committed offsets stays up, publishes nothing and keeps the estimate") {
+    implicit val sqlCtx = spark.sqlContext
+    val out = Files.createTempDirectory("graft-kmv-replayonly").toString
+    val (s1, q1) = startOn(out, Files.createTempDirectory("graft-kmv-ckpt10").toString)
+    s1.addData((0L, 0L, "a"), (0L, 1L, "b"), (0L, 2L, "c"))
+    q1.processAllAvailable()
+    q1.stop()
+    assert(CardinalityMonitor.estimate(spark, out, "t") === 3L)
+    // "crash": fresh checkpoint, and the source hands back ONLY
+    // already-committed offsets — the whole micro-batch resume-filters
+    // to nothing
+    val (s2, q2) = startOn(out, Files.createTempDirectory("graft-kmv-ckpt11").toString)
+    try {
+      s2.addData((0L, 0L, "a"), (0L, 2L, "c"))
+      q2.processAllAvailable()
+      assert(q2.isActive && q2.exception.isEmpty)
+      assert(CommitLog.latestVersion(spark, out, "t") === 0L)
+      assert(CardinalityMonitor.estimate(spark, out, "t") === 3L)
+      // and the stream still commits what comes next
+      s2.addData((0L, 3L, "d"))
+      q2.processAllAvailable()
+    } finally q2.stop()
+    assert(CommitLog.latestVersion(spark, out, "t") === 1L)
+    assert(CardinalityMonitor.estimate(spark, out, "t") === 4L)
+  }
+
   test("non-round-tripping formats are rejected up front") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -189,6 +189,27 @@ class DedupIngestSpec extends SparkSuite {
     assert(readAll(out) === Set((0L, "a"), (1L, "b")))
   }
 
+  test("blocklist gate: many distinct listed payloads in one batch are all dropped, clean ones kept") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val out = Files.createTempDirectory("graft-bl-many").toString
+    val ckpt = Files.createTempDirectory("graft-bl-many-ckpt").toString
+    // more than ten flagged and ten blocked fingerprints: the verify's
+    // literal lists take Spark's set-membership (InSet) form
+    val bad = (0 until 15).map(i => s"bad$i")
+    val badDf = bad.toDF("payload")
+    val blocklist = badDf.select(DedupIngest.fingerprint(badDf).as("fp"))
+    val s = MemoryStream[(Long, Long, String)]
+    val q = DedupIngest.startLoggedBlocklisted(
+      s.toDF().toDF("part", "off", "payload"), out, "t", blocklist,
+      flushSize = 100, ckpt, fpp = 0.5)
+    val clean = (15 until 40).map(i => (0L, i.toLong, s"ok$i"))
+    s.addData(bad.zipWithIndex.map { case (b, i) => (0L, i.toLong, b) } ++ clean: _*)
+    q.processAllAvailable()
+    q.stop()
+    assert(readAll(out) === clean.map(r => (r._2, r._3)).toSet)
+  }
+
   test("reconcileFingerprints rebuilds the missing version from committed data") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -2,12 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSuite
@@ -53,36 +50,6 @@ class DemuxJobBudgetSpec extends SparkSuite {
     }
   }
 
-  /** Records every job start with its streaming query id, batch id and
-    * job group (Spark's local properties on the job). */
-  private final class JobLog extends SparkListener {
-    private val starts = new ConcurrentLinkedQueue[(String, String, String)]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      def prop(k: String) = Option(e.properties)
-        .flatMap(p => Option(p.getProperty(k))).getOrElse("")
-      starts.add((prop("sql.streaming.queryId"),
-        prop("streaming.sql.batchId"), prop("spark.jobGroup.id")))
-      ()
-    }
-
-    /** Jobs per micro-batch of one query. The listener bus is
-      * asynchronous: a marker job is run first, and once its start has
-      * arrived every earlier event has too. */
-    def perBatch(queryId: String): Map[Long, Int] = {
-      val sc = spark.sparkContext
-      val marker = s"drain-${java.util.UUID.randomUUID()}"
-      sc.setJobGroup(marker, "listener drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!starts.asScala.exists(_._3 == marker)) {
-        assert(System.nanoTime() < deadline, "listener bus did not drain")
-        Thread.sleep(20)
-      }
-      starts.asScala.toSeq.collect { case (`queryId`, b, _) if b.nonEmpty => b.toLong }
-        .groupBy(identity).map { case (b, js) => b -> js.size }
-    }
-  }
-
   /** Run the seeded chunks through one demux query, one micro-batch per
     * chunk; returns the jobs each micro-batch ran. */
   private def runBudgeted(start: (org.apache.spark.sql.DataFrame, String) =>
@@ -90,7 +57,7 @@ class DemuxJobBudgetSpec extends SparkSuite {
       : Map[Long, Int] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val log = new JobLog
+    val log = new JobLog(spark)
     spark.sparkContext.addSparkListener(log)
     try {
       val s = MemoryStream[Rec]

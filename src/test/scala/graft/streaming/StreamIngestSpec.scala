@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -260,9 +261,9 @@ class StreamIngestSpec extends SparkSuite {
     // flushSize 5 but only 2 records arrive: the schedule fire (the
     // processing-time trigger) must still flush and commit the partial
     // file — DataWriterAvroTest.java:356-403's contract.
-    val q = StreamIngest.startScheduled(
+    val q = StreamIngest.start(
       s.toDF().toDF("part", "off", "payload"), out, "t", flushSize = 5, ckpt,
-      periodMs = 200L)
+      Some(Trigger.ProcessingTime(200L)))
     s.addData((0L, 0L, "a"), (0L, 1L, "b"))
     q.processAllAvailable()
     q.stop()
