@@ -22,8 +22,9 @@ import org.apache.spark.sql.types._
   *
   * Executors write one `DataFileWriter` per (partition, file) group —
   * the same lazy writer-per-encoded-partition shape as the reference
-  * (`TopicPartitionWriter.java:547-584`) — into `+tmp` staging; the
-  * driver then commits by the same idempotent rename as BatchWriter.
+  * (`TopicPartitionWriter.java:547-584`) — into `+tmp` staging, and
+  * report each file's offset range; the driver then commits by the same
+  * idempotent rename as BatchWriter.
   *
   * Type surface matches the reference's exercised lattice (§1.3:
   * boolean/int/long/float/double/string + binary + timestamp-micros);
@@ -134,7 +135,13 @@ object AvroSink {
     * `TopicPartitionWriter.java:516-519`) — the same
     * disjoint-contiguous-ranges discipline as the BatchWriter formats;
     * everything downstream keys on (part, file_idx) and is
-    * split-scheme agnostic. */
+    * split-scheme agnostic.
+    *
+    * One staging job writes the files and returns the commit manifest:
+    * each task reports the offset range of every file it staged, so
+    * nothing is pinned and no second pass computes the ranges. (The
+    * size rotation's first offset still reads `df` in its own
+    * aggregate, see [[Rotation]].) */
   def write(df: DataFrame, outDir: String, topic: String, flushSize: Int,
             pad: Int = FileNaming.DefaultZeroPadWidth,
             codec: String = "null",
@@ -148,13 +155,15 @@ object AvroSink {
     require(FileNaming.isValidTopicName(topic),
       s"illegal topic name: '$topic'")
     val spark = df.sparkSession
+    // the sink pins nothing itself; the per-topic fan-out that feeds it
+    // filters a persisted batch
     SessionSafety.disableNaNDroppingCachePruning(spark)
-    val sized = (rotationBucket match {
+    val sized = rotationBucket match {
       case Some(bucket) => Rotation.withBucketChangeFileIndex(
         df, Seq(col("part")), col("off"), bucket, flushSize)
       case None => Rotation.withSizeFileIndex(
         df, Seq(col("part")), col("off"), flushSize)
-    }).persist()
+    }
     val staged = s"$outDir/+tmp/$topic"
     val payloadSchema = StructType(
       sized.schema.fields.filterNot(f => f.name == "file_idx"))
@@ -167,22 +176,21 @@ object AvroSink {
     FileSystem.get(new Path(staged).toUri, spark.sparkContext.hadoopConfiguration)
       .delete(new Path(staged), true)
 
-    sized.repartition(col("part"), col("file_idx"))
+    // the staging job returns the manifest: each task reports the
+    // (part, file_idx, first offset, last offset) of every file it
+    // staged, and collect() keeps one successful attempt per partition
+    import spark.implicits._
+    val manifest = sized.repartition(col("part"), col("file_idx"))
       .sortWithinPartitions(col("part"), col("file_idx"), col("off"))
-      .foreachPartition { rows: Iterator[Row] =>
+      .mapPartitions { rows: Iterator[Row] =>
         val tc = org.apache.spark.TaskContext.get()
         val tag =
           if (tc != null) s"attempt-${tc.taskAttemptId()}"
           else s"attempt-${java.util.UUID.randomUUID()}"
-        writePartitionStaged(rows, avroJson, staged, codec, fieldNames, tag)
+        writePartitionStaged(rows, avroJson, staged, codec, fieldNames, tag).iterator
       }
-
-    val manifest = sized.groupBy(col("part"), col("file_idx"))
-      .agg(min(col("off")).as("s"), max(col("off")).as("e"))
       .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._2))
-    sized.unpersist()
 
     val fs = FileSystem.get(new Path(outDir).toUri, spark.sparkContext.hadoopConfiguration)
     val committed = manifest.toSeq.map { case (p, i, s, e) =>
@@ -211,19 +219,23 @@ object AvroSink {
     * temp is dropped); on a POSIX local FS it is last-wins — either
     * way the visible file is ONE attempt's complete output, and both
     * attempts wrote identical logical content. A failed attempt
-    * deletes its temps. */
+    * deletes its temps.
+    *
+    * Returns `(part, file_idx, min off, max off)` for each staged file:
+    * the offsets this attempt wrote into it. */
   private[ingest] def writePartitionStaged(rows: Iterator[Row], avroJson: String,
       staged: String, codec: String, fieldNames: Seq[String],
-      attemptTag: String): Unit = {
+      attemptTag: String): Seq[(Long, Long, Long, Long)] = {
     val schema = new Schema.Parser().parse(avroJson)
     val fs = FileSystem.get(new Path(staged).toUri, new Configuration())
-    val writers =
-      mutable.Map.empty[(Long, Long), (Path, DataFileWriter[GenericRecord])]
+    val writers = mutable.Map.empty[(Long, Long),
+      (Path, DataFileWriter[GenericRecord], Array[Long])]
     var ok = false
     try {
       rows.foreach { r =>
         val key = (r.getAs[Long]("part"), r.getAs[Long]("file_idx"))
-        val (_, w) = writers.getOrElseUpdate(key, {
+        val off = r.getAs[Long]("off")
+        val (_, w, range) = writers.getOrElseUpdate(key, {
           val tmp = new Path(
             s"$staged/part=${key._1}/file_idx=${key._2}/part-0.avro.$attemptTag.tmp")
           val out = fs.create(tmp, true)
@@ -231,8 +243,10 @@ object AvroSink {
             new GenericDatumWriter[GenericRecord](schema))
           dfw.setCodec(codecFor(codec))
           dfw.create(schema, out)
-          (tmp, dfw)
+          (tmp, dfw, Array(off, off))
         })
+        range(0) = math.min(range(0), off)
+        range(1) = math.max(range(1), off)
         val rec = new GenericData.Record(schema)
         fieldNames.foreach(n => rec.put(n, toAvro(r.getAs[Any](n))))
         w.append(rec)
@@ -245,7 +259,7 @@ object AvroSink {
       // stranding their temps un-deleted
       val bodyOk = ok
       var firstClose: Throwable = null
-      writers.values.foreach { case (_, w) =>
+      writers.values.foreach { case (_, w, _) =>
         try w.close()
         catch { case t: Throwable =>
           if (firstClose == null) firstClose = t else firstClose.addSuppressed(t)
@@ -253,12 +267,12 @@ object AvroSink {
         }
       }
       if (ok)
-        writers.foreach { case ((p, i), (tmp, _)) =>
+        writers.foreach { case ((p, i), (tmp, _, _)) =>
           val dest = new Path(s"$staged/part=$p/file_idx=$i/part-0.avro")
           if (!fs.rename(tmp, dest)) fs.delete(tmp, false) // lost to a winner
         }
       else
-        writers.values.foreach { case (tmp, _) => fs.delete(tmp, false) }
+        writers.values.foreach { case (tmp, _, _) => fs.delete(tmp, false) }
       // a failed close means unflushed data: the task MUST fail even
       // though the row loop succeeded (returning normally here would
       // let the commit adopt a truncated file). When the BODY already
@@ -266,6 +280,7 @@ object AvroSink {
       // mask the root cause.
       if (bodyOk && firstClose != null) throw firstClose
     }
+    writers.toSeq.map { case ((p, i), (_, _, r)) => (p, i, r(0), r(1)) }
   }
 
   private def fromAvro(v: Any, dt: DataType): Any = (v, dt) match {

@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: the shuffle is one `repartition` on (part, file_idx) —
   * the same key the output layout needs, so no second shuffle at write;
-  * the manifest aggregate is tiny (one row per output file); renames
-  * are driver-side metadata ops, linear in file count, not data size.
+  * the staging write is the one pass over the data and its tasks report
+  * each file's offset range (the manifest: one row per output file, no
+  * pinned frame, no second job); renames are driver-side metadata ops,
+  * linear in file count, not data size.
   */
 object BatchWriter {
 
@@ -58,9 +60,9 @@ object BatchWriter {
     * its own exchange: the payload crosses the wire exactly once per
     * micro-batch (the streaming commit loops' shape — one writer unit
     * per Kafka partition, the reference's own TopicPartitionWriter
-    * model). A wrong claim fails loudly: a key group split across
-    * tasks stages >1 file and trips the one-staged-file invariant
-    * below. */
+    * model). A wrong claim fails loudly and commits nothing: a key
+    * group split across tasks stages >1 file, which the commit checks
+    * for every key before its first rename. */
   def writeAssigned(sizedIn: DataFrame, outDir: String, topic: String,
                     pad: Int = FileNaming.DefaultZeroPadWidth,
                     format: String = "parquet",
@@ -95,11 +97,12 @@ object BatchWriter {
       topicOf = None, encodedOf = Some("__enc"), topic = topic, pad = pad,
       format = format)
 
-  /** The ONE staging+manifest+rename commit protocol, shared by the
+  /** The ONE staging+rename commit protocol, shared by the
     * single-topic ([[writeAssigned]]), multi-topic ([[writeMulti]])
     * and encoded-partition ([[writeAssignedEncoded]]) paths —
     * `topicOf`/`encodedOf` add those columns to every key (routing,
-    * staging layout, manifest). */
+    * staging layout, manifest). The staging write's own tasks report
+    * the manifest (each key's offset range, [[StagedRanges]]). */
   private def stageAndCommit(sizedIn: DataFrame, outDir: String,
                              staged: String, topicOf: Option[String],
                              topic: String, pad: Int,
@@ -121,18 +124,17 @@ object BatchWriter {
       require(TopicName.matches(topic), s"illegal topic name: '$topic'")
     val keyCols = topicOf.toSeq ++ encodedOf.toSeq ++ Seq("part", "file_idx")
 
-    // Pin the frame across the two jobs below (staging write + manifest
-    // aggregate): without this, the whole upstream — including any
-    // stream-side resume filter — runs twice, and a nondeterministic
-    // recompute could let the manifest disagree with the staged data.
-    SessionSafety.disableNaNDroppingCachePruning(sizedIn.sparkSession)
-    val sized = sizedIn.persist()
+    // Nothing is pinned here: the staging write reads its input once
+    // and reports each key's offset range itself (StagedRanges). The
+    // guard stays at this chokepoint because the admission gates and
+    // fan-outs that feed it persist their own frames.
+    SessionSafety.disableNaNDroppingCachePruning(spark)
 
     // Stage: exactly one file per key — the repartition key equals the
     // directory key, so each dynamic partition is written by a single
     // task.
     val payloadCols =
-      sized.columns.filterNot(keyCols.toSet + "off").toSeq
+      sizedIn.columns.filterNot(keyCols.toSet + "off").toSeq
     val toStage =
       if (format == "text") {
         // the reference's text sink writes value.toString, one per line
@@ -140,9 +142,9 @@ object BatchWriter {
         // only in the filename range
         require(payloadCols.size == 1,
           s"text format needs exactly one payload column, got $payloadCols")
-        sized.select(keyCols.map(col) ++ Seq(col("off"),
+        sizedIn.select(keyCols.map(col) ++ Seq(col("off"),
           col(payloadCols.head).cast("string").as("value")): _*)
-      } else sized
+      } else sizedIn
     val dropAfterSort: Seq[String] = if (format == "text") Seq("off") else Seq.empty
     // prePartitioned: the input already clusters each staging key's
     // rows in one partition (see writeAssigned) — the local sort alone
@@ -151,17 +153,16 @@ object BatchWriter {
     val distributed =
       if (prePartitioned) toStage
       else toStage.repartition(keyCols.map(col): _*)
+    // observed after the exchange and before the sort: the ranges come
+    // from exactly the rows each staging task writes
+    val observed = new StagedRanges(distributed, keyCols, "off")
     val tStage0 = System.nanoTime()
-    distributed
+    observed.staged
       .sortWithinPartitions((keyCols :+ "off").map(col): _*)
       .drop(dropAfterSort: _*)
       .write.mode("overwrite").partitionBy(keyCols: _*)
       .format(format).save(staged)
-    val tManifest0 = logPhase(topic, "stage", tStage0)
-
-    val manifest = sized.groupBy(keyCols.map(col): _*)
-      .agg(min(col("off")).as("s"), max(col("off")).as("e"))
-      .collect()
+    val manifest = observed.ranges
       .map { r =>
         var idx = 0
         def str(opt: Option[String], default: String): String =
@@ -177,55 +178,72 @@ object BatchWriter {
           r.getLong(idx + 2), r.getLong(idx + 3))
       }
       .sortBy(t => (t._1, t._2, t._3, t._4))
-    sized.unpersist()
-    val tRename0 = logPhase(topic, "manifest", tManifest0, manifest.length)
+    val tRename0 = logPhase(topic, "stage", tStage0, manifest.length)
 
     val fs = FileSystem.get(new Path(outDir).toUri, spark.sparkContext.hadoopConfiguration)
-    // validate EVERY topic name and encoded path before the FIRST
-    // rename: a bad value mid-loop would otherwise leave earlier
-    // groups' files already committed — a torn batch. Pre-commit, so
-    // cleaning staging and failing is safe.
+    def abort(msg: String): Nothing = {
+      fs.delete(new Path(staged), true)
+      throw new IllegalArgumentException(msg)
+    }
+    // validate EVERY topic name, encoded path, staged file and name
+    // span before the FIRST rename: a bad value mid-loop would
+    // otherwise leave earlier groups' files already committed — a torn
+    // batch. Pre-commit, so cleaning staging and failing is safe.
     val badTopics = manifest.map(_._1).distinct.filterNot(TopicName.matches)
     val badEnc = encodedOf.toSeq.flatMap(_ => manifest.map(_._2).distinct
       .filter(v => v.isEmpty || v.startsWith("/") || v.split('/').exists(seg =>
         seg.isEmpty || seg == "." || seg == "..")))
     if (badTopics.nonEmpty || badEnc.nonEmpty) {
-      fs.delete(new Path(staged), true)
       def show(v: String) = if (v.isEmpty) "<null/empty>" else s"'$v'"
       val hint =
         if ((badTopics ++ badEnc).exists(_.isEmpty))
           " (a null partition field or timestamp encodes to an empty value)"
         else ""
-      throw new IllegalArgumentException(
-        s"illegal topic name(s)/encoded partition(s): " +
-          (badTopics.map(show) ++ badEnc.map(show)).mkString(", ") + hint)
+      abort(s"illegal topic name(s)/encoded partition(s): " +
+        (badTopics.map(show) ++ badEnc.map(show)).mkString(", ") + hint)
     }
-    val committed = manifest.toSeq.map { case (t, enc, p, i, s, e) =>
+    // each key's staged file(s), from ONE walk of the staging tree; a
+    // key group split across tasks (a wrong prePartitioned claim)
+    // staged more than one. listStatus per directory, not
+    // listFiles(recursive): its located statuses load permissions,
+    // which the local filesystem does by forking a process per file.
+    val stagedFiles: Map[Path, Seq[Path]] = {
+      def walk(dir: Path): Seq[Path] = fs.listStatus(dir).toSeq.flatMap { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else if (st.getPath.getName.startsWith("part-")) Seq(st.getPath)
+        else Nil
+      }
+      walk(new Path(staged)).groupBy(_.getParent)
+    }
+    val planned = manifest.toSeq.map { case (t, enc, p, i, s, e) =>
       val encSeg = encodedOf.map { ec =>
         // Spark escapes special chars (e.g. '/') in dynamic-partition
         // directory VALUES — reproduce its escaping to locate the dir
         s"/$ec=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .escapePathName(enc)
       }.getOrElse("")
-      val srcDir = topicOf match {
+      val srcDir = fs.makeQualified(topicOf match {
         case Some(tc) => new Path(s"$staged/$tc=$t$encSeg/part=$p/file_idx=$i")
         case None => new Path(s"$staged$encSeg/part=$p/file_idx=$i")
+      })
+      val src = stagedFiles.getOrElse(srcDir, Nil) match {
+        case Seq(one) => one
+        case found => abort(
+          s"expected exactly one staged file in $srcDir, found ${found.length}")
       }
-      val srcs = fs.listStatus(srcDir).filter(_.getPath.getName.startsWith("part-"))
-      require(srcs.length == 1,
-        s"expected exactly one staged file in $srcDir, found ${srcs.length}")
-      // encoded layout: the encoder's directory (possibly nested,
-      // `year=.../month=...`); default layout: partition=<p>
-      val destDir = new Path(s"$outDir/$t/" +
-        (if (encodedOf.isDefined) enc else s"partition=$p"))
-      fs.mkdirs(destDir)
       // planned-range naming override (compaction): the output claims
       // the GROUP's name span, not the surviving rows' min/max — a
       // zero-row member (an erasure keeper) must widen the name, never
       // let the output collide with a live input (see rewriteGroups)
       val (ns, ne) = nameBounds.getOrElse((p, i), (s, e))
-      require(ns <= s && e <= ne,
-        s"name-bounds override [$ns,$ne] does not cover rows [$s,$e]")
+      if (ns > s || e > ne)
+        abort(s"name-bounds override [$ns,$ne] does not cover rows [$s,$e]")
+      (t, enc, p, i, ns, ne, src)
+    }
+    val committed = planned.map { case (t, enc, p, i, ns, ne, src) =>
+      val destDir = new Path(s"$outDir/$t/" +
+        (if (encodedOf.isDefined) enc else s"partition=$p"))
+      fs.mkdirs(destDir)
       val dest = new Path(destDir, FileNaming.encodeName(t, p.toInt, ns, ne, ext, pad))
       // idempotent redo: a file already committed under this exact
       // offset range is the same data — skip, like FSWAL.apply. A
@@ -235,9 +253,8 @@ object BatchWriter {
       // IOException, not require: this is an ENVIRONMENT failure, the
       // class Retry.withBackoff re-runs (IllegalArgumentException is
       // its deterministic-config fast-fail).
-      if (!fs.exists(dest) && !fs.rename(srcs.head.getPath, dest))
-        throw new java.io.IOException(
-          s"rename failed: ${srcs.head.getPath} -> $dest")
+      if (!fs.exists(dest) && !fs.rename(src, dest))
+        throw new java.io.IOException(s"rename failed: $src -> $dest")
       CommittedFile(t, p, i, ns, ne, dest.toString)
     }
     fs.delete(new Path(staged), true)
@@ -250,7 +267,8 @@ object BatchWriter {
   private val TopicName = "[A-Za-z0-9._-]+".r
 
   /** Write-plane phase telemetry (r18, VERDICT-r17 task #6): stderr
-    * stage/manifest/rename timings per commit, so the metadata plane's
+    * stage (the staging write, which also yields the manifest) and
+    * rename timings per commit, so the metadata plane's
     * growth with file count is measurable without profiling. Gated on
     * `SPARK_GRAFT_WRITE_TELEMETRY=1` — the lines are per-write, which
     * in a soak test is thousands of lines of noise. */
@@ -270,7 +288,7 @@ object BatchWriter {
     * (topic, part, off, payload...); size rotation keys on
     * (topic, part) and the staging job writes ONE dynamic-partition
     * layout keyed (topic, part, file_idx) — job count stays O(1) in
-    * topic count (stage + manifest), vs one write per topic when
+    * topic count (one staging job), vs one write per topic when
     * looping [[write]]. The reference's `DataWriter.write` demux
     * (`DataWriter.java:347-353`) has the same single-pass shape, one
     * buffer per TopicPartition. Commit renames are per (topic,

@@ -46,14 +46,14 @@ import graft.schema.SchemaEvolution
   * a replayed record meets the same verdict, and must preserve the
   * batch's partitioning — filters, projections and broadcast joins
   * only — because the writer stages without a second exchange
-  * (`prePartitioned`). Pinning follows one rule: the loop pins
-  * nothing, the writer pins its own sized frame, and a filter that
+  * (`prePartitioned`). Pinning follows one rule: neither the loop nor
+  * the writer pins anything (the staging write reads its input once
+  * and reports each file's offset range itself), and a filter that
   * reads its input in more than one action pins it itself and hands
-  * the pinned frame back for release. The single-topic writers read
-  * their input twice before their own pin (the rotation's first-offset
-  * aggregate, then the staging write), so a filter whose admitted
-  * frame is costly to recompute (an index or corpus probe) pins that
-  * frame as well.
+  * the pinned frame back for release. The single-topic writers still
+  * read their input twice (the rotation's first-offset aggregate, then
+  * the staging write), so a filter whose admitted frame is costly to
+  * recompute (an index or corpus probe) pins that frame as well.
   */
 object StreamIngest {
 
@@ -184,16 +184,21 @@ object StreamIngest {
       // ONE payload exchange per micro-batch (r18): hash the batch by
       // the key up front, then every downstream step rides that
       // clustering — the offset dedup (keyed ⊇ the key), the resume
-      // filter, the admission filter, the rotation's first offset, the
-      // staging write (the writers pass prePartitioned=true so the
-      // staging job's repartition is skipped) and the manifest
-      // aggregate. The per-partition serialization this implies is the
+      // filter, the admission filter, the rotation's first offset and
+      // the staging write (the writers pass prePartitioned=true so the
+      // staging job's repartition is skipped), whose tasks also report
+      // the manifest. The per-partition serialization this implies is the
       // reference's own model: one TopicPartitionWriter per Kafka
       // partition. The batch-local dedup catches an at-least-once
       // upstream handing the SAME offset twice within one micro-batch,
-      // which the committed-offset filter alone cannot.
+      // which the committed-offset filter alone cannot. The partition
+      // count is explicit: adaptive execution may coalesce a by-column
+      // repartition's partitions, and the staging write that rides this
+      // exchange would then run on fewer tasks than there are shuffle
+      // partitions (a 20k-row demux batch staged on 2 tasks, not 4).
       val fresh = BatchWriter.resumeFrom(
-        prepare(batch).repartition(keys.map(col): _*)
+        prepare(batch).repartition(
+          spark.conf.get("spark.sql.shuffle.partitions").toInt, keys.map(col): _*)
           .dropDuplicates(keys :+ "off"),
         committed, byTopic = topic.isRight)
       val gate = admit(fresh)
@@ -627,14 +632,16 @@ object StreamIngest {
     * Pair with `KafkaSource.fromTopics` + `normalize` in production.
     *
     * Scale shape: job count per micro-batch is O(1) in topic count,
-    * about 5 jobs — ONE payload exchange keyed (topic, part) that the
-    * dedup, the (topic, part)-keyed resume filter (broadcast join over
-    * the recovered offset maps, metadata-scale), the first-offset /
-    * rotation windows (computed inside each task, see [[Rotation]])
-    * and the staging write all ride; ONE staging job
+    * 3 jobs — the map stage of ONE payload exchange keyed (topic, part)
+    * that the dedup, the (topic, part)-keyed resume filter (broadcast
+    * join over the recovered offset maps, metadata-scale, its own job
+    * alongside the map stage once anything is committed), the
+    * first-offset / rotation windows (computed inside each task, see
+    * [[Rotation]]) and the staging write all ride; and ONE staging job
     * dynamic-partitioned by (topic, part, file_idx)
-    * (`BatchWriter.writeMulti`), whose pinned frame the manifest
-    * aggregate reads back. No per-batch topic roster is collected.
+    * (`BatchWriter.writeMulti`), whose tasks also report each file's
+    * offset range. Nothing is pinned and no per-batch topic roster is
+    * collected.
     * Only the COMMIT stays per-topic — each topic's log is its own
     * atomicity domain, and those publishes are driver-side metadata
     * ops.

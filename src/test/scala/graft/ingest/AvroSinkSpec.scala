@@ -28,6 +28,42 @@ class AvroSinkSpec extends SparkSuite {
       Seq((0L, "v0", 0.0), (1L, "v1", 1.5), (2L, "v2", 3.0)))
   }
 
+  test("multi-partition size and bucket rotation: golden committed names and manifest") {
+    import org.apache.spark.sql.functions.col
+    // three partitions, shuffled, with record time crossing a 60 s
+    // bucket every few offsets (and one record running early)
+    val df = new scala.util.Random(7).shuffle(for (p <- 0L to 2L; o <- 0L until 10L)
+      yield (p, o, s"v$p-$o", new java.sql.Timestamp(
+        (o * 23 + p * 11 - (if (o == 6) 40 else 0)) * 1000L)))
+      .toDF("part", "off", "s", "ts").repartition(3)
+    for ((bucket, golden) <- Seq(
+        (None, SizeGolden),
+        (Some(org.apache.spark.sql.functions.floor(
+          org.apache.spark.sql.functions.unix_seconds(col("ts")) / 60)), BucketGolden))) {
+      val out = Files.createTempDirectory("avro-golden").toString
+      val m = AvroSink.write(df, out, "t", flushSize = 4, rotationBucket = bucket)
+      val names = BatchWriter.listCommitted(spark, out, "t")
+      assert(names === golden, names.mkString("\n", "\n", "\n"))
+      assert(m.map(f => new org.apache.hadoop.fs.Path(f.path).getName).sorted === golden)
+      assert(m.map(f => (f.partition, f.fileIdx)).distinct.size === m.size)
+      assert(AvroSink.readDataFrame(spark, s"$out/t", df.drop("part").schema)
+        .select(col("s")).as[String].collect().sorted ===
+        df.select(col("s")).as[String].collect().sorted)
+    }
+  }
+
+  private def names(p: Int, ranges: (Long, Long)*): Seq[String] =
+    ranges.map { case (s, e) => FileNaming.encodeName("t", p, s, e, ".avro") }
+
+  /** Committed names of the test above, recorded before the staging
+    * job returned its own manifest. */
+  private val SizeGolden: Seq[String] =
+    (0 to 2).flatMap(names(_, (0L, 3L), (4L, 7L), (8L, 9L)))
+  private val BucketGolden: Seq[String] =
+    names(0, (0L, 2L), (3L, 6L), (7L, 7L), (8L, 9L)) ++
+      names(1, (0L, 2L), (3L, 4L), (5L, 5L), (6L, 6L), (7L, 7L), (8L, 9L)) ++
+      names(2, (0L, 1L), (2L, 4L), (5L, 6L), (7L, 9L))
+
   test("an out-of-charset topic name refuses before any write") {
     val out = java.nio.file.Files.createTempDirectory("avro-badname").toString
     // "x+1" would write names the committed-file regex never parses

@@ -142,6 +142,58 @@ class BatchWriterSpec extends SparkSuite {
     assert(!new java.io.File(s"$out/+tmp/+multi").exists())
   }
 
+  test("a wrong prePartitioned claim fails before any rename — no torn commit") {
+    val out = tmpDir()
+    // two single-partition frames: partition 0 lies wholly in the
+    // first, partition 1 is split across both, so its one staging key
+    // is written by two tasks (RDD-backed, so the optimizer cannot
+    // fold the union into one local relation)
+    def frame(rows: (Long, Long, String)*) =
+      spark.sparkContext.parallelize(rows, 1).toDF("part", "off", "payload")
+    val first = frame((0L, 0L, "a"), (0L, 1L, "b"), (1L, 0L, "c"), (1L, 1L, "d"))
+    val second = frame((1L, 2L, "e"), (1L, 3L, "f"))
+    val e = intercept[IllegalArgumentException] {
+      BatchWriter.write(first.union(second), out, "t", flushSize = 10,
+        prePartitioned = true)
+    }
+    assert(e.getMessage.contains("expected exactly one staged file"), e.getMessage)
+    val topicDir = new java.io.File(s"$out/t")
+    assert(!topicDir.exists() || Files.walk(topicDir.toPath)
+      .filter(Files.isRegularFile(_)).count() === 0,
+      "no file may commit when any key staged more than one file")
+    assert(!new java.io.File(s"$out/+tmp/t").exists())
+  }
+
+  test("a staging job that fails once: the retry's manifest holds each key once") {
+    val out = tmpDir()
+    val topics = Seq("alpha", "beta", "gamma")
+    val df = (for (t <- topics; p <- 0L to 1L; o <- 0L until 5L)
+      yield (t, p, o, s"$t-$p-$o")).toDF("topic", "part", "off", "payload")
+    FailOnce.armed.set(true)
+    val failOnce = udf { (v: String) =>
+      if (org.apache.spark.TaskContext.getPartitionId() == 1 &&
+        FailOnce.armed.getAndSet(false))
+        throw new java.io.IOException("injected staging failure")
+      v
+    }.asNondeterministic()
+    // the UDF runs after the exchange, inside the staging job's tasks
+    val input = df.repartition(4, col("topic"), col("part"))
+      .withColumn("payload", failOnce(col("payload")))
+    val manifest = Retry.withBackoff(2, 0) {
+      BatchWriter.writeMulti(input, out, flushSize = 3, prePartitioned = true)
+    }
+    assert(!FailOnce.armed.get(), "the first attempt must have failed")
+    val golden = for (t <- topics; p <- 0 to 1; (s, e) <- Seq((0L, 2L), (3L, 4L)))
+      yield FileNaming.encodeName(t, p, s, e, ".parquet")
+    val keys = manifest.map(f => (f.topic, f.partition, f.fileIdx))
+    assert(keys.distinct.size === keys.size, s"a key twice: $keys")
+    assert(manifest.map(f => new org.apache.hadoop.fs.Path(f.path).getName) === golden)
+    assert(topics.flatMap(BatchWriter.listCommitted(spark, out, _)) === golden)
+    assert(topics.flatMap(t => BatchWriter.read(spark, out, t)
+      .select(col("payload")).as[String].collect()).sorted ===
+      df.select(col("payload")).as[String].collect().sorted)
+  }
+
   test("planCompaction sizes groups by per-file spans, not gap-inclusive group span") {
     // retention-expired gap 10..99: the gap holds no records, so the
     // two 10-record files must land in ONE group (the old end-start
@@ -288,4 +340,10 @@ class BatchWriterSpec extends SparkSuite {
       BatchWriter.write(records(Seq(0L), 2), out, "t", 2, format = "orc2")
     }
   }
+}
+
+/** Arms a one-shot staging-task failure (local mode: executors share
+  * the test JVM). */
+private object FailOnce {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

@@ -14,7 +14,7 @@ import graft.ingest.{BatchWriter, CommitLog, FileNaming, GraftConfig}
   * the committed file boundaries that budget must not move.
   *
   * A micro-batch of `StreamIngest.startLoggedMulti` (default formats)
-  * costs one payload exchange, one pinned frame and about 5 jobs: no
+  * costs one payload exchange and at most 3 jobs: no pinned frame, no
   * per-batch topic-roster job, no extra persists, and the size
   * rotation's first offset computed inside each task. The file names
   * for a fixed seeded input are pinned against a golden list, so the
@@ -113,10 +113,10 @@ class DemuxJobBudgetSpec extends SparkSuite {
 
   private def assertBudget(jobs: Map[Long, Int]): Unit = {
     assert(jobs.keySet === Set(0L, 1L, 2L), s"one micro-batch per chunk: $jobs")
-    assert(jobs.values.max <= 5, s"jobs per micro-batch over budget: $jobs")
+    assert(jobs.values.max <= 3, s"jobs per micro-batch over budget: $jobs")
   }
 
-  test("size rotation: at most 5 jobs per micro-batch, golden file boundaries") {
+  test("size rotation: at most 3 jobs per micro-batch, golden file boundaries") {
     val out = Files.createTempDirectory("graft-budget-size").toString
     val jobs = runBudgeted((df, ckpt) =>
       StreamIngest.startLoggedMulti(df, out, flushSize = 3, ckpt))
@@ -125,7 +125,7 @@ class DemuxJobBudgetSpec extends SparkSuite {
     assertBudget(jobs)
   }
 
-  test("rotationBucket: at most 5 jobs per micro-batch, golden file boundaries") {
+  test("rotationBucket: at most 3 jobs per micro-batch, golden file boundaries") {
     val cfg = GraftConfig(Map("flush.size" -> "3",
       "rotate.interval.ms" -> "60000"))
     val out = Files.createTempDirectory("graft-budget-bucket").toString

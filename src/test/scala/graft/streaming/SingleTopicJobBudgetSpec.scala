@@ -16,11 +16,15 @@ import graft.operators.LinearClassifier
 /** The single-topic commit loop's per-micro-batch Spark job budget, and
   * the committed file names that budget must not move.
   *
-  * The budgets are the job counts of the loop before it was shared with
-  * the multi-topic and gated loops: `startLogged(cfg)` on an hourly
-  * layout may not run more jobs per micro-batch than it did, and the
-  * quality and blocklist gates run at least one job fewer, because the
-  * admitted frame is no longer probed for emptiness before the write. */
+  * The budgets start from the job counts of the loop before it was
+  * shared with the multi-topic and gated loops: `startLogged(cfg)` on an
+  * hourly layout ran 9/10/10 jobs, the quality gate 8/9/9 and the
+  * blocklist gate 13/14/14. Sharing the loop took the hourly loop to
+  * 8/9/9 and each gate at least one job lower (the admitted frame is no
+  * longer probed for emptiness before the write). The staging write
+  * then stopped pinning its frame and reports its own offset ranges,
+  * which removed the cache-build job and the manifest job from every
+  * micro-batch: each budget is those counts minus two. */
 class SingleTopicJobBudgetSpec extends SparkSuite {
 
   private type Rec = (Long, Long, Timestamp, String)
@@ -88,8 +92,8 @@ class SingleTopicJobBudgetSpec extends SparkSuite {
     assert(back.toSet === produced)
     val names = CommitLog.snapshot(spark, root, "t").sorted
     assert(names === HourlyGolden, names.mkString("\n", "\n", "\n"))
-    // 9, 10 and 10 jobs before the merge
-    assertWithin(jobs, Map(0L -> 9, 1L -> 10, 2L -> 10))
+    // 8, 9 and 9 jobs with the pinned staging frame and its manifest job
+    assertWithin(jobs, Map(0L -> 6, 1L -> 7, 2L -> 7))
   }
 
   test("quality gate: at least one job fewer per non-empty micro-batch") {
@@ -104,8 +108,8 @@ class SingleTopicJobBudgetSpec extends SparkSuite {
       chunks(7L, 3, o => if (o % 3 == 0) "bad awful" else "good nice"),
       (df, ckpt) => QualityGate.startLoggedQualityFiltered(df, out, "t",
         weights, buckets, flushSize = 4, ckpt))
-    // 8, 9 and 9 jobs before the merge
-    assertWithin(jobs, Map(0L -> 7, 1L -> 8, 2L -> 8))
+    // 7, 8 and 8 jobs with the pinned staging frame and its manifest job
+    assertWithin(jobs, Map(0L -> 5, 1L -> 6, 2L -> 6))
   }
 
   test("blocklist gate: at least one job fewer per non-empty micro-batch") {
@@ -117,8 +121,8 @@ class SingleTopicJobBudgetSpec extends SparkSuite {
       chunks(11L, 3, o => if (o % 4 == 1) "blocked" else s"doc $o"),
       (df, ckpt) => DedupIngest.startLoggedBlocklisted(
         df.drop("timestamp"), out, "t", blocklist, flushSize = 4, ckpt))
-    // 13, 14 and 14 jobs before the merge
-    assertWithin(jobs, Map(0L -> 12, 1L -> 13, 2L -> 13))
+    // 8, 9 and 9 jobs with the pinned staging frame and its manifest job
+    assertWithin(jobs, Map(0L -> 6, 1L -> 7, 2L -> 7))
   }
 
   /** Committed names (log-relative paths) of the seeded hourly input,
