@@ -139,9 +139,9 @@ object AvroSink {
     *
     * One staging job writes the files and returns the commit manifest:
     * each task reports the offset range of every file it staged, so
-    * nothing is pinned and no second pass computes the ranges. (The
-    * size rotation's first offset still reads `df` in its own
-    * aggregate, see [[Rotation]].) */
+    * nothing is pinned and no second pass computes the ranges. An input
+    * already clustered by `part` (a streaming batch) is staged where it
+    * lies; any other is exchanged by `(part, file_idx)` first. */
   def write(df: DataFrame, outDir: String, topic: String, flushSize: Int,
             pad: Int = FileNaming.DefaultZeroPadWidth,
             codec: String = "null",
@@ -158,11 +158,13 @@ object AvroSink {
     // the sink pins nothing itself; the per-topic fan-out that feeds it
     // filters a persisted batch
     SessionSafety.disableNaNDroppingCachePruning(spark)
+    val byPart = Seq(col("part"))
+    val inTask = Rotation.clusteredBy(df, byPart)
     val sized = rotationBucket match {
       case Some(bucket) => Rotation.withBucketChangeFileIndex(
-        df, Seq(col("part")), col("off"), bucket, flushSize)
+        df, byPart, col("off"), bucket, flushSize)
       case None => Rotation.withSizeFileIndex(
-        df, Seq(col("part")), col("off"), flushSize)
+        df, byPart, col("off"), flushSize, "file_idx", inTask)
     }
     val staged = s"$outDir/+tmp/$topic"
     val payloadSchema = StructType(
@@ -180,7 +182,7 @@ object AvroSink {
     // (part, file_idx, first offset, last offset) of every file it
     // staged, and collect() keeps one successful attempt per partition
     import spark.implicits._
-    val manifest = sized.repartition(col("part"), col("file_idx"))
+    val manifest = (if (inTask) sized else sized.repartition(col("part"), col("file_idx")))
       .sortWithinPartitions(col("part"), col("file_idx"), col("off"))
       .mapPartitions { rows: Iterator[Row] =>
         val tc = org.apache.spark.TaskContext.get()

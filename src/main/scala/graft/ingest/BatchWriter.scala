@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * reference's WAL apply (`wal/FSWAL.java:100-135`).
   *
   * Scale notes: the shuffle is one `repartition` on (part, file_idx) —
-  * the same key the output layout needs, so no second shuffle at write;
+  * the output layout's own key — or none for an input already
+  * clustered by `part` (a streaming batch, see [[writeAssigned]]);
   * the staging write is the one pass over the data and its tasks report
   * each file's offset range (the manifest: one row per output file, no
   * pinned frame, no second job); renames are driver-side metadata ops,
@@ -43,35 +44,33 @@ object BatchWriter {
     * `record.value().toString` contract). */
   def write(df: DataFrame, outDir: String, topic: String, flushSize: Int,
             pad: Int = FileNaming.DefaultZeroPadWidth,
-            format: String = "parquet",
-            prePartitioned: Boolean = false): Seq[CommittedFile] = {
-    val sized = Rotation.withSizeFileIndex(df, Seq(col("part")), col("off"), flushSize)
-    writeAssigned(sized, outDir, topic, pad, format, prePartitioned)
+            format: String = "parquet"): Seq[CommittedFile] = {
+    val byPart = Seq(col("part"))
+    val inTask = Rotation.clusteredBy(df, byPart)
+    val sized = Rotation.withSizeFileIndex(df, byPart, col("off"), flushSize,
+      "file_idx", inTask)
+    stageAndCommit(sized, outDir, s"$outDir/+tmp/$topic",
+      topicOf = None, topic = topic, pad = pad, format = format,
+      colocated = inTask)
   }
 
   /** Commit a frame that already carries its `file_idx` assignment
     * (size rotation, interval buckets, or schema-rotation segments).
     *
-    * `prePartitioned` (r18): the caller guarantees every row group
-    * sharing a staging key (part, file_idx) lives in ONE partition of
-    * the input — e.g. the frame was `repartition(part)`-ed upstream
-    * and only partitioning-preserving ops (projections, filters,
-    * broadcast joins, caching) ran since. The staging job then skips
-    * its own exchange: the payload crosses the wire exactly once per
-    * micro-batch (the streaming commit loops' shape — one writer unit
-    * per Kafka partition, the reference's own TopicPartitionWriter
-    * model). A wrong claim fails loudly and commits nothing: a key
-    * group split across tasks stages >1 file, which the commit checks
-    * for every key before its first rename. */
+    * When the frame's plan already clusters it by `part` (or by
+    * `(part, file_idx)`), as a streaming loop's batch is, the staging
+    * job writes it where it lies and the payload crosses the wire once;
+    * any other frame is exchanged by the staging key first. Either way
+    * each staging key's rows are written by one task, which the commit
+    * checks for every key before its first rename. */
   def writeAssigned(sizedIn: DataFrame, outDir: String, topic: String,
                     pad: Int = FileNaming.DefaultZeroPadWidth,
-                    format: String = "parquet",
-                    prePartitioned: Boolean = false): Seq[CommittedFile] =
+                    format: String = "parquet"): Seq[CommittedFile] =
     // staging under +tmp/<topic>: +tmp is shared by concurrently-
     // ingesting topics under the same outDir, each owning its dir
     stageAndCommit(sizedIn, outDir, s"$outDir/+tmp/$topic",
       topicOf = None, topic = topic, pad = pad, format = format,
-      prePartitioned = prePartitioned)
+      colocated = Rotation.clusteredBy(sizedIn, Seq(col("part"), col("file_idx"))))
 
   /** [[writeAssigned]] routed through a partition ENCODER: `sizedIn`
     * carries an `__enc` column holding each record's encoded-partition
@@ -90,19 +89,22 @@ object BatchWriter {
     * Compaction is likewise a default-layout feature — per-directory
     * ranges are gappy/interleaved here, and [[compact]]'s layout guard
     * refuses non-`partition=<p>` paths up front. */
-  def writeAssignedEncoded(sizedIn: DataFrame, outDir: String, topic: String,
-                           pad: Int = FileNaming.DefaultZeroPadWidth,
-                           format: String = "parquet"): Seq[CommittedFile] =
+  private[ingest] def writeAssignedEncoded(sizedIn: DataFrame, outDir: String,
+                                           topic: String, pad: Int, format: String,
+                                           colocated: Boolean): Seq[CommittedFile] =
     stageAndCommit(sizedIn, outDir, s"$outDir/+tmp/$topic",
       topicOf = None, encodedOf = Some("__enc"), topic = topic, pad = pad,
-      format = format)
+      format = format, colocated = colocated)
 
   /** The ONE staging+rename commit protocol, shared by the
     * single-topic ([[writeAssigned]]), multi-topic ([[writeMulti]])
     * and encoded-partition ([[writeAssignedEncoded]]) paths —
     * `topicOf`/`encodedOf` add those columns to every key (routing,
     * staging layout, manifest). The staging write's own tasks report
-    * the manifest (each key's offset range, [[StagedRanges]]). */
+    * the manifest (each key's offset range, [[StagedRanges]]).
+    * `colocated`: the input is clustered by a subset of the key (one
+    * [[Rotation.clusteredBy]] check of the writer's input, whose
+    * clustering the rotation keeps), so staging needs no exchange. */
   private def stageAndCommit(sizedIn: DataFrame, outDir: String,
                              staged: String, topicOf: Option[String],
                              topic: String, pad: Int,
@@ -110,7 +112,7 @@ object BatchWriter {
                              encodedOf: Option[String] = None,
                              nameBounds: Map[(Long, Long), (Long, Long)] =
                                Map.empty,
-                             prePartitioned: Boolean = false): Seq[CommittedFile] = {
+                             colocated: Boolean): Seq[CommittedFile] = {
     if (format == "avro")
       throw new IllegalArgumentException(
         "avro via DataFrameWriter needs the spark-avro module (absent " +
@@ -146,12 +148,8 @@ object BatchWriter {
           col(payloadCols.head).cast("string").as("value")): _*)
       } else sizedIn
     val dropAfterSort: Seq[String] = if (format == "text") Seq("off") else Seq.empty
-    // prePartitioned: the input already clusters each staging key's
-    // rows in one partition (see writeAssigned) — the local sort alone
-    // yields one staged file per key, and the payload is not
-    // re-exchanged
     val distributed =
-      if (prePartitioned) toStage
+      if (colocated) toStage
       else toStage.repartition(keyCols.map(col): _*)
     // observed after the exchange and before the sort: the ranges come
     // from exactly the rows each staging task writes
@@ -203,8 +201,8 @@ object BatchWriter {
         (badTopics.map(show) ++ badEnc.map(show)).mkString(", ") + hint)
     }
     // each key's staged file(s), from ONE walk of the staging tree; a
-    // key group split across tasks (a wrong prePartitioned claim)
-    // staged more than one. listStatus per directory, not
+    // key group split across tasks would have staged more than one
+    // (the safety net under `colocated`). listStatus per directory, not
     // listFiles(recursive): its located statuses load permissions,
     // which the local filesystem does by forking a process per file.
     val stagedFiles: Map[Path, Seq[Path]] = {
@@ -301,8 +299,7 @@ object BatchWriter {
                  pad: Int = FileNaming.DefaultZeroPadWidth,
                  format: String = "parquet",
                  rotationBucket: Option[org.apache.spark.sql.Column] = None,
-                 dropAfterRotation: Seq[String] = Nil,
-                 prePartitioned: Boolean = false)
+                 dropAfterRotation: Seq[String] = Nil)
       : Seq[CommittedFile] = {
     if (format == "avro")
       throw new IllegalArgumentException(
@@ -314,15 +311,13 @@ object BatchWriter {
     // `dropAfterRotation` removes routing-only columns (the text
     // format's record-time source) AFTER the bucket expression read
     // them — the single-topic cfg.write text discipline.
+    val keys = Seq(col("topic"), col("part"))
+    val inTask = Rotation.clusteredBy(df, keys)
     val sized0 = rotationBucket match {
       case Some(bucket) => Rotation.withBucketChangeFileIndex(df,
-        Seq(col("topic"), col("part")), col("off"), bucket, flushSize)
-      // prePartitioned: the input is hash-clustered by (topic, part),
-      // so the first offset is a per-task window, not an aggregate
-      // exchange plus a broadcast job
-      case scala.None => Rotation.withSizeFileIndex(df,
-        Seq(col("topic"), col("part")), col("off"), flushSize,
-        clustered = prePartitioned)
+        keys, col("off"), bucket, flushSize)
+      case scala.None => Rotation.withSizeFileIndex(df, keys, col("off"),
+        flushSize, "file_idx", inTask)
     }
     val sized = if (dropAfterRotation.isEmpty) sized0
                 else sized0.drop(dropAfterRotation.distinct: _*)
@@ -335,7 +330,7 @@ object BatchWriter {
     // so a topic of that name would share (and wipe) this directory
     stageAndCommit(sized, outDir, s"$outDir/+tmp/+multi",
       topicOf = Some("topic"), topic = "", pad = pad, format = format,
-      prePartitioned = prePartitioned)
+      colocated = inTask)
   }
 
   /** Formats compaction can read back with their own schema and the
@@ -556,9 +551,10 @@ object BatchWriter {
     val spans = multi.zipWithIndex.map { case (g, i) =>
       (g.partition, i.toLong) -> (g.start, g.end)
     }.toMap
+    // a fresh file read is clustered by nothing
     stageAndCommit(assigned, outDir, s"$outDir/+tmp/$topic",
       topicOf = None, topic = topic, pad = pad, format = format,
-      nameBounds = spans)
+      nameBounds = spans, colocated = false)
   }
 
   /** Recursive committed-file listing (B10, `FileUtils.java:151-221`):

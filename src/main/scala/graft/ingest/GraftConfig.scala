@@ -525,20 +525,21 @@ final case class GraftConfig(
     val ts = recordTime(col)
     val withEnc = df.withColumn("__enc",
       partitionPath(col("part"), ts, col))
+    val keys = Seq(col("__enc"), col("part"))
+    val inTask = Rotation.clusteredBy(withEnc, keys)
     val grouped =
       if (rotateIntervalMs > 0)
         // bucket-CHANGE rotation, not bucket-value grouping — the
         // latter lets out-of-order event time emit overlapping offset
         // ranges into one directory (see the Rotation scaladoc)
-        Rotation.withBucketChangeFileIndex(withEnc,
-          Seq(col("__enc"), col("part")), col("off"),
+        Rotation.withBucketChangeFileIndex(withEnc, keys, col("off"),
           Rotation.longDiv(unix_millis(ts), lit(rotateIntervalMs)), flushSize)
       else
         // size-only: `(off − first)/flush` partitions the offset space
         // — files can only run small where encoding makes offsets
-        // gappy, never above flushSize records; no window needed
-        Rotation.withSizeFileIndex(withEnc,
-          Seq(col("__enc"), col("part")), col("off"), flushSize)
+        // gappy, never above flushSize records
+        Rotation.withSizeFileIndex(withEnc, keys, col("off"), flushSize,
+          "file_idx", inTask)
     // text files carry only the payload line; the routing timestamp was
     // consumed by the encoder/rotation above and must not count as a
     // second payload column (dropped AFTER grouping — the rotation
@@ -549,7 +550,8 @@ final case class GraftConfig(
     val sized =
       if (format == "text") grouped.drop(rotationDropColumns: _*)
       else grouped
-    BatchWriter.writeAssignedEncoded(sized, root, topic, zeroPadWidth, format)
+    BatchWriter.writeAssignedEncoded(sized, root, topic, zeroPadWidth, format,
+      inTask)
   }
 
   /** [[write]] against the configured store root — the consumer of

@@ -3,6 +3,7 @@ package graft.ingest
 import java.time.{Instant, ZoneId}
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,21 +17,17 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: Kafka offsets are dense per partition, so the
   * record→file assignment is pure arithmetic off the partition's first
-  * offset. That first offset has two forms:
+  * offset. That first offset has two forms, and the input's own plan
+  * picks between them ([[clusteredBy]] on the rotation keys):
   *
-  *  - aggregate (the default): the per-partition minima as a tiny
-  *    aggregate broadcast-joined back — two map-side passes, no
-  *    windows, no single-task sort of a whole partition's history, and
-  *    no assumption about how the input is distributed. It costs its
-  *    own exchange and a broadcast job. Batch writes (`BatchWriter.
-  *    write`, `GraftConfig.write`, `CommitLog.writeLogged`) and the
-  *    single-topic streaming loops use it.
-  *  - in-task (`clustered = true`): when the caller guarantees the
-  *    input is already hash-clustered by the rotation keys (the
-  *    `prePartitioned` contract of `BatchWriter`), the minimum is a
-  *    window over those keys, computed inside each task with no
-  *    exchange and no extra job. The multi-topic streaming write
-  *    (`BatchWriter.writeMulti` with `prePartitioned = true`) uses it.
+  *  - in-task, for an input already clustered by the keys (every
+  *    streaming loop hashes its batch by `part` or `(topic, part)`): a
+  *    window over the keys, inside each task — no exchange, no job;
+  *  - aggregate, for any other input (batch writes such as
+  *    `CommitLog.writeLogged`, compaction and the `IngestQueries` rows,
+  *    often over few `part` values): the per-key minima as a tiny
+  *    aggregate broadcast-joined back — an exchange and a broadcast
+  *    job, but no single-task sort of a whole partition's history.
   *
   * Both forms yield the same first offset, so `file_idx` and the
   * committed file names are identical.
@@ -48,14 +45,22 @@ object Rotation {
     ((a - pmod(a, b)).cast("decimal(38,0)") / b.cast("decimal(38,0)"))
       .cast("long")
 
-  /** Add the per-key minimum of `valueCol` as column `as`. Clustered
-    * input (see the object doc): a window over the keys, inside each
-    * task. Otherwise a broadcast join of the aggregate (one row per
-    * topic-partition). */
+  /** Whether `df`'s physical plan already clusters its rows by `keys`,
+    * so every row of one key value lives in one partition — the test
+    * Spark's `EnsureRequirements` makes before it adds an exchange. A
+    * key that is not a plain column of `df` answers false. Plans `df`;
+    * runs no job. */
+  private[ingest] def clusteredBy(df: DataFrame, keys: Seq[Column]): Boolean =
+    !df.isStreaming && df.queryExecution.sparkPlan.outputPartitioning.satisfies(
+      ClusteredDistribution(df.select(keys: _*).queryExecution.analyzed.output))
+
+  /** Add the per-key minimum of `valueCol` as column `as`: a window
+    * over the keys, inside each task, when `inTask` (the input is
+    * clustered by them, see the object doc); otherwise a broadcast
+    * join of the aggregate (one row per topic-partition). */
   private def withFirst(df: DataFrame, partitionBy: Seq[Column],
-                        valueCol: Column, as: String,
-                        clustered: Boolean = false): DataFrame = {
-    if (clustered)
+                        valueCol: Column, as: String, inTask: Boolean): DataFrame = {
+    if (inTask)
       return df.withColumn(as, min(valueCol).over(Window.partitionBy(partitionBy: _*)))
     val keyed = df.withColumn("__rot_key",
       concat_ws("\u0000", partitionBy.map(_.cast("string")): _*))
@@ -67,13 +72,18 @@ object Rotation {
     * `TopicPartitionWriter.java:521`, test `avro/DataWriterAvroTest.java:63-77`):
     * with dense per-partition offsets (the Kafka guarantee), the record
     * at `offset` lands in file `(offset - firstOffset) / flushSize`.
-    * Adds column `as` (default "file_idx"). `clustered`: `df` is
-    * already hash-clustered by `partitionBy`, so the first offset is
-    * computed in-task (see the object doc). */
+    * Adds column `as` (default "file_idx"). */
   def withSizeFileIndex(df: DataFrame, partitionBy: Seq[Column], offset: Column,
-                        flushSize: Int, as: String = "file_idx",
-                        clustered: Boolean = false): DataFrame =
-    withFirst(df, partitionBy, offset, "__first_offset", clustered)
+                        flushSize: Int, as: String = "file_idx"): DataFrame =
+    withSizeFileIndex(df, partitionBy, offset, flushSize, as,
+      clusteredBy(df, partitionBy))
+
+  /** [[withSizeFileIndex]] for a writer that already holds the
+    * [[clusteredBy]] answer for `partitionBy` (its staging needs it too). */
+  private[ingest] def withSizeFileIndex(df: DataFrame, partitionBy: Seq[Column],
+                                        offset: Column, flushSize: Int, as: String,
+                                        inTask: Boolean): DataFrame =
+    withFirst(df, partitionBy, offset, "__first_offset", inTask)
       .withColumn(as, longDiv(offset - col("__first_offset"), lit(flushSize.toLong)))
       .drop("__first_offset")
 
@@ -90,8 +100,9 @@ object Rotation {
 
   /** Data-time interval BUCKETING: which interval each record's
     * timestamp falls in, relative to the partition's first record —
-    * the batch-analysis view of `rotate.interval.ms` (query A12), via
-    * the same aggregate+broadcast-join (no window). Adds column `as`.
+    * the batch-analysis view of `rotate.interval.ms` (query A12), off
+    * the same first-value forms as [[withSizeFileIndex]]. Adds column
+    * `as`.
     *
     * NOT a file-assignment policy: grouping FILES by bucket value lets
     * out-of-order event time interleave buckets and emit OVERLAPPING
@@ -102,7 +113,7 @@ object Rotation {
     * rotates when the incoming record's time crosses the interval). */
   def withIntervalBucket(df: DataFrame, partitionBy: Seq[Column], tsMillis: Column,
                          intervalMs: Long, as: String = "bucket_idx"): DataFrame =
-    withFirst(df, partitionBy, tsMillis, "__first_ts")
+    withFirst(df, partitionBy, tsMillis, "__first_ts", clusteredBy(df, partitionBy))
       .withColumn(as, longDiv(tsMillis - col("__first_ts"), lit(intervalMs)))
       .drop("__first_ts")
 

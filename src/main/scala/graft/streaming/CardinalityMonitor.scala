@@ -77,8 +77,7 @@ object CardinalityMonitor {
     DedupIngest.requireRereadable(format, "cardinality monitoring")
     reconcile(spark, outDir, topic, format, k)
     StreamIngest.commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
-      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
-        prePartitioned = true),
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec),
       admit = fresh => {
         // a projection: partitioning preserved (r18). The write and the
         // sketch install both read it: pin it

@@ -510,8 +510,7 @@ object DedupIngest {
     NativeExpressions.register(spark)
     reconcileSignatures(spark, outDir, topic, textCol, format)
     StreamIngest.commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
-      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
-        prePartitioned = true),
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec),
       admit = fresh => {
         val dup = dupAgainstIndex(spark, outDir, topic,
           sigOf(fresh, textCol, Seq("part", "off")), Seq("part", "off"),
@@ -562,8 +561,7 @@ object DedupIngest {
     val spark = stream.sparkSession
     NativeExpressions.register(spark)
     StreamIngest.commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
-      StreamIngest.writerFor(outDir, topic, flushSize, "parquet", "null",
-        prePartitioned = true),
+      StreamIngest.writerFor(outDir, topic, flushSize, "parquet", "null"),
       admit = fresh => {
         // snapshot emptiness, not latestVersion: a remove-only history
         // has versions but no live files, and the empty-corpus answer
@@ -609,12 +607,8 @@ object DedupIngest {
               sqrt(col("__n2").cast("double")) *
               sqrt(SF.intDot(col("cv"), col("cv")).cast("double")))
             .select(col("part"), col("off")).distinct()
-          // the writer reads its input twice (the rotation's
-          // first-offset aggregate, then the staging write): pin the
-          // gated frame, or each read re-runs the corpus verify
-          val gated = fq.join(broadcast(dupNew), Seq("part", "off"), "left_anti")
-            .drop("__qv").persist()
-          StreamIngest.Admission(gated, pinned = Seq(gated))
+          StreamIngest.Admission(
+            fq.join(broadcast(dupNew), Seq("part", "off"), "left_anti").drop("__qv"))
         }
       })
   }
@@ -634,8 +628,7 @@ object DedupIngest {
     val spark = stream.sparkSession
     reconcileFingerprints(spark, outDir, topic, format)
     StreamIngest.commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
-      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
-        prePartitioned = true),
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec),
       admit = fresh => {
         val withFp = fresh.withColumn("__fp", fingerprint(fresh))
         // deterministic in-batch survivor: lowest (part, off) per fp
@@ -646,8 +639,7 @@ object DedupIngest {
         // broadcast: `first` is one row per distinct in-batch fp (the
         // same size class as batchFps below, already broadcast) - and
         // the explicit hint keeps the semi-join from ever re-shuffling
-        // the payload, preserving the loop's part-hash for the
-        // prePartitioned write
+        // the payload, preserving the loop's part-hash for the write
         val survivors = withFp.join(broadcast(first),
           Seq("__fp", "part", "off"), "left_semi")
         // corpus gate: the index never shuffles — the batch's
@@ -732,8 +724,7 @@ object DedupIngest {
           lit(blBytes), xxhash64(fp))
       }
     StreamIngest.commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
-      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
-        prePartitioned = true),
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec),
       admit = fresh => {
         // the flagged probe below and the write both read the batch:
         // pin it
@@ -752,7 +743,7 @@ object DedupIngest {
           if (flagged.isEmpty) Nil
           else distinctFps(bl.filter(col("fp").isin(flagged: _*)))
         // the verdict is a literal filter: partitioning preserved (r18),
-        // and the writer's two reads of it re-read only the pinned batch
+        // and the write re-reads only the pinned batch
         StreamIngest.Admission(
           (if (blocked.isEmpty) withFp
            else withFp.filter(!col("__fp").isin(blocked: _*))).drop("__fp"),

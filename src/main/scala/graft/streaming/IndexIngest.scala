@@ -82,6 +82,5 @@ object IndexIngest {
                      checkpoint: String, flushSize: Int,
                      trigger: Option[Trigger]): StreamingQuery =
     StreamIngest.commitLoop(framed, checkpoint, trigger, indexDir, Left(topic),
-      b => BatchWriter.write(b, indexDir, topic, flushSize,
-        prePartitioned = true))
+      b => BatchWriter.write(b, indexDir, topic, flushSize))
 }

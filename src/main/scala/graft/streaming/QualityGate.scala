@@ -56,8 +56,7 @@ object QualityGate {
     // a scan-side filter: partitioning preserved (r18), and only the
     // write reads it, so nothing is pinned
     StreamIngest.commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
-      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
-        prePartitioned = true),
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec),
       admit = fresh =>
         StreamIngest.Admission(fresh.filter(margin >= lit(minMargin))))
   }

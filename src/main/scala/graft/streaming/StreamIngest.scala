@@ -43,17 +43,17 @@ import graft.schema.SchemaEvolution
   *
   * An admission filter (the `DedupIngest`, `QualityGate` and
   * `CardinalityMonitor` gates) must be deterministic in the record, so
-  * a replayed record meets the same verdict, and must preserve the
-  * batch's partitioning — filters, projections and broadcast joins
-  * only — because the writer stages without a second exchange
-  * (`prePartitioned`). Pinning follows one rule: neither the loop nor
-  * the writer pins anything (the staging write reads its input once
-  * and reports each file's offset range itself), and a filter that
-  * reads its input in more than one action pins it itself and hands
-  * the pinned frame back for release. The single-topic writers still
-  * read their input twice (the rotation's first-offset aggregate, then
-  * the staging write), so a filter whose admitted frame is costly to
-  * recompute (an index or corpus probe) pins that frame as well.
+  * a replayed record meets the same verdict. It should keep the batch's
+  * partitioning — filters, projections and broadcast joins — because
+  * the writer reads that from the admitted frame's plan: a clustered
+  * frame is rotated and staged where it lies, and one a filter
+  * re-shuffled costs the writer one more exchange, never correctness.
+  * Pinning follows one rule: neither the loop nor the writer pins
+  * anything (the writer reads its input once, in the staging write,
+  * which reports each file's offset range itself), and a filter that
+  * reads its input or its admitted frame in more than one action (a
+  * probe it collects, a side-plane install) pins that frame itself and
+  * hands it back for release.
   */
 object StreamIngest {
 
@@ -85,8 +85,7 @@ object StreamIngest {
             format: String = "parquet",
             avroCodec: String = "null"): StreamingQuery =
     commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
-      writerFor(outDir, topic, flushSize, format, avroCodec,
-        prePartitioned = true),
+      writerFor(outDir, topic, flushSize, format, avroCodec),
       logged = false)
 
   /** The per-batch committer for a (format, codec) choice — B1's Avro
@@ -96,16 +95,12 @@ object StreamIngest {
     * through [[BatchWriter]]. */
   private[streaming] def writerFor(outDir: String, topic: String, flushSize: Int,
                         format: String, avroCodec: String,
-                        pad: Int = FileNaming.DefaultZeroPadWidth,
-                        prePartitioned: Boolean = false)
+                        pad: Int = FileNaming.DefaultZeroPadWidth)
       : DataFrame => Seq[BatchWriter.CommittedFile] =
     if (format == "avro")
-      // AvroSink runs its own per-attempt staging; the pre-partition
-      // contract is a BatchWriter staging-job optimization only
       b => AvroSink.write(b, outDir, topic, flushSize, pad, avroCodec)
     else
-      b => BatchWriter.write(b, outDir, topic, flushSize, pad, format,
-        prePartitioned)
+      b => BatchWriter.write(b, outDir, topic, flushSize, pad, format)
 
   /** A committed file's topic-relative path (what [[CommitLog]]
     * stores) — works for the default `partition=<p>` layout and any
@@ -185,11 +180,11 @@ object StreamIngest {
       // the key up front, then every downstream step rides that
       // clustering — the offset dedup (keyed ⊇ the key), the resume
       // filter, the admission filter, the rotation's first offset and
-      // the staging write (the writers pass prePartitioned=true so the
-      // staging job's repartition is skipped), whose tasks also report
-      // the manifest. The per-partition serialization this implies is the
-      // reference's own model: one TopicPartitionWriter per Kafka
-      // partition. The batch-local dedup catches an at-least-once
+      // the staging write (the writers find the clustering in the
+      // admitted frame's plan and skip their own exchange), whose tasks
+      // also report the manifest. The per-partition serialization this
+      // implies is the reference's own model: one TopicPartitionWriter
+      // per Kafka partition. The batch-local dedup catches an at-least-once
       // upstream handing the SAME offset twice within one micro-batch,
       // which the committed-offset filter alone cannot. The partition
       // count is explicit: adaptive execution may coalesce a by-column
@@ -240,8 +235,7 @@ object StreamIngest {
                   format: String = "parquet",
                   avroCodec: String = "null"): StreamingQuery =
     commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
-      writerFor(outDir, topic, flushSize, format, avroCodec,
-        prePartitioned = true))
+      writerFor(outDir, topic, flushSize, format, avroCodec))
 
   /** [[startLogged]] plus the reference's LIVE Hive sync
     * (`DataWriter.java:383-420` bootstrap + the first-write
@@ -266,8 +260,7 @@ object StreamIngest {
     // covers (restart path — their dirs exist), then grow per batch
     val registered = scala.collection.mutable.Set.empty[Long] ++
       CommitLog.maxOffsets(spark, outDir, topic).keys
-    val commit = writerFor(outDir, topic, flushSize, format, "null",
-      prePartitioned = true)
+    val commit = writerFor(outDir, topic, flushSize, format, "null")
     commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
       write = batch => {
         if (!tableReady) {
@@ -307,8 +300,7 @@ object StreamIngest {
                            format: String = "parquet",
                            avroCodec: String = "null"): StreamingQuery =
     commitLoop(stream, checkpoint, trigger, outDir, Left(topic),
-      writerFor(outDir, topic, flushSize, format, avroCodec,
-        prePartitioned = true),
+      writerFor(outDir, topic, flushSize, format, avroCodec),
       afterPublish = (_, _) => graft.ingest.MaterializedAgg.refreshAll(
         stream.sparkSession, outDir, topic, views, format))
 
@@ -710,7 +702,7 @@ object StreamIngest {
         } finally { pinned.unpersist(); () }
       } else fresh => retried(
         BatchWriter.writeMulti(fresh, outDir, flushSize, pad, format,
-          rotationBucket, rotationDrop, prePartitioned = true))
+          rotationBucket, rotationDrop))
     // per-topic materialized views refresh AFTER that topic's data
     // publish (the startLoggedWithViews ordering contract — a crash
     // mid-refresh leaves the view stale, and its filename watermark

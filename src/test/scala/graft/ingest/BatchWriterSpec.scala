@@ -142,26 +142,77 @@ class BatchWriterSpec extends SparkSuite {
     assert(!new java.io.File(s"$out/+tmp/+multi").exists())
   }
 
-  test("a wrong prePartitioned claim fails before any rename — no torn commit") {
+  test("a non-clustered input is exchanged before staging: one file per key") {
     val out = tmpDir()
     // two single-partition frames: partition 0 lies wholly in the
-    // first, partition 1 is split across both, so its one staging key
-    // is written by two tasks (RDD-backed, so the optimizer cannot
-    // fold the union into one local relation)
+    // first, partition 1 is split across both, so staged where it lies
+    // its one key would be written by two tasks (RDD-backed, so the
+    // optimizer cannot fold the union into one local relation)
     def frame(rows: (Long, Long, String)*) =
       spark.sparkContext.parallelize(rows, 1).toDF("part", "off", "payload")
     val first = frame((0L, 0L, "a"), (0L, 1L, "b"), (1L, 0L, "c"), (1L, 1L, "d"))
     val second = frame((1L, 2L, "e"), (1L, 3L, "f"))
-    val e = intercept[IllegalArgumentException] {
-      BatchWriter.write(first.union(second), out, "t", flushSize = 10,
-        prePartitioned = true)
-    }
-    assert(e.getMessage.contains("expected exactly one staged file"), e.getMessage)
-    val topicDir = new java.io.File(s"$out/t")
-    assert(!topicDir.exists() || Files.walk(topicDir.toPath)
-      .filter(Files.isRegularFile(_)).count() === 0,
-      "no file may commit when any key staged more than one file")
+    BatchWriter.write(first.union(second), out, "t", flushSize = 10)
+    assert(BatchWriter.listCommitted(spark, out, "t") === Seq(
+      "t+0+0000000000+0000000001.parquet",
+      "t+1+0000000000+0000000003.parquet"))
+    assert(BatchWriter.read(spark, out, "t").select(col("payload")).as[String]
+      .collect().sorted.toSeq === Seq("a", "b", "c", "d", "e", "f"))
     assert(!new java.io.File(s"$out/+tmp/t").exists())
+  }
+
+  test("clustered and shuffled inputs commit the same files; the clustered staging job has no exchange") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val rows = records(Seq(0L, 1L, 2L), 7)
+    // pinned, so the staging job reads the clustering from the cache
+    // and any exchange in its plan is the writer's own
+    val byPart = rows.repartition(2, col("part")).persist()
+    byPart.count()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (helper.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          writes.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the staging job's exchanges; the listener bus is asynchronous, so
+    // wait for the write's event
+    def stagingExchanges(write: => Seq[BatchWriter.CommittedFile]) = {
+      writes.clear()
+      val manifest = write
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (writes.isEmpty) {
+        assert(System.nanoTime() < deadline, "no write event")
+        Thread.sleep(20)
+      }
+      assert(writes.size === 1, "one staging job per write")
+      (manifest, helper.collectWithSubqueries(writes.peek()) { case e: Exchange => e }.size)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val (outC, outS) = (tmpDir(), tmpDir())
+      val (mC, exC) = stagingExchanges(
+        BatchWriter.write(byPart, outC, "t", flushSize = 3))
+      val (mS, exS) = stagingExchanges(
+        BatchWriter.write(rows.repartition(3), outS, "t", flushSize = 3))
+      assert(exC === 0, "the clustered write stages where its input lies")
+      assert(exS > 0, "the shuffled write is exchanged by the staging key")
+      def shape(m: Seq[BatchWriter.CommittedFile]) = m.map(f => (f.partition,
+        f.fileIdx, f.startOffset, f.endOffset, new org.apache.hadoop.fs.Path(f.path).getName))
+      assert(shape(mC) === shape(mS))
+      assert(shape(mC).map(_._5) === (for (p <- 0 to 2; (s, e) <- Seq((0L, 2L), (3L, 5L), (6L, 6L)))
+        yield FileNaming.encodeName("t", p, s, e, ".parquet")))
+      assert(BatchWriter.listCommitted(spark, outC, "t") ===
+        BatchWriter.listCommitted(spark, outS, "t"))
+    } finally {
+      spark.listenerManager.unregister(listener)
+      byPart.unpersist()
+      ()
+    }
   }
 
   test("a staging job that fails once: the retry's manifest holds each key once") {
@@ -180,7 +231,7 @@ class BatchWriterSpec extends SparkSuite {
     val input = df.repartition(4, col("topic"), col("part"))
       .withColumn("payload", failOnce(col("payload")))
     val manifest = Retry.withBackoff(2, 0) {
-      BatchWriter.writeMulti(input, out, flushSize = 3, prePartitioned = true)
+      BatchWriter.writeMulti(input, out, flushSize = 3)
     }
     assert(!FailOnce.armed.get(), "the first attempt must have failed")
     val golden = for (t <- topics; p <- 0 to 1; (s, e) <- Seq((0L, 2L), (3L, 4L)))

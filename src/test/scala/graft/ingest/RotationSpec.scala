@@ -2,6 +2,8 @@ package graft.ingest
 
 import java.time.ZoneId
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -25,6 +27,18 @@ class RotationSpec extends SparkSuite {
     assert(got === big / 4L)
   }
 
+  /** `(part, off, file_idx)` of `df` under both first-offset forms:
+    * the aggregate (`df` as given, clustered by nothing) and the
+    * in-task window (`df` clustered by `part`). */
+  private def bothForms(df: DataFrame, flushSize: Int): Seq[Set[(Long, Long, Long)]] = {
+    val forms = Seq(df, df.repartition(2, col("part")))
+      .map(Rotation.withSizeFileIndex(_, Seq(col("part")), col("off"), flushSize))
+    assert(forms.map(_.queryExecution.sparkPlan.exists(_.isInstanceOf[WindowExec])) ===
+      Seq(false, true), "the input's clustering picks the form")
+    forms.map(_.select(col("part"), col("off"), col("file_idx"))
+      .as[(Long, Long, Long)].collect().toSet)
+  }
+
   test("withSizeFileIndex reproduces the flush.size=3 file split") {
     val df = (0L to 6L).map(o => ("t", 12L, o)).toDF("topic", "part", "off")
     val got = Rotation.withSizeFileIndex(df, Seq(col("part")), col("off"), 3)
@@ -33,15 +47,15 @@ class RotationSpec extends SparkSuite {
       .orderBy(col("file_idx"))
       .as[(Long, Long, Long)].collect().toSeq
     assert(got === Seq((0L, 0L, 2L), (1L, 3L, 5L), (2L, 6L, 6L)))
+    val Seq(aggregate, inTask) = bothForms(df, 3)
+    assert(inTask === aggregate)
   }
 
   test("withSizeFileIndex is relative to each partition's first offset") {
     val df = Seq(("t", 0L, 100L), ("t", 0L, 101L), ("t", 1L, 7L), ("t", 1L, 9L))
       .toDF("topic", "part", "off")
-    val got = Rotation.withSizeFileIndex(df, Seq(col("part")), col("off"), 2)
-      .select(col("part"), col("off"), col("file_idx"))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got === Set((0L, 100L, 0L), (0L, 101L, 0L), (1L, 7L, 0L), (1L, 9L, 1L)))
+    val want = Set((0L, 100L, 0L), (0L, 101L, 0L), (1L, 7L, 0L), (1L, 9L, 1L))
+    assert(bothForms(df, 2) === Seq(want, want))
   }
 
   test("sizeFileIndexByCount handles offset gaps (compacted topics)") {
