@@ -1,8 +1,9 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LoggedRelation
 
 /** Batch ingest: the reference's write→commit→recover loop
   * (`/root/reference/src/main/java/io/confluent/connect/hdfs/TopicPartitionWriter.java:313-433`,
@@ -202,17 +203,9 @@ object BatchWriter {
     }
     // each key's staged file(s), from ONE walk of the staging tree; a
     // key group split across tasks would have staged more than one
-    // (the safety net under `colocated`). listStatus per directory, not
-    // listFiles(recursive): its located statuses load permissions,
-    // which the local filesystem does by forking a process per file.
-    val stagedFiles: Map[Path, Seq[Path]] = {
-      def walk(dir: Path): Seq[Path] = fs.listStatus(dir).toSeq.flatMap { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.startsWith("part-")) Seq(st.getPath)
-        else Nil
-      }
-      walk(new Path(staged)).groupBy(_.getParent)
-    }
+    // (the safety net under `colocated`)
+    val stagedFiles: Map[Path, Seq[Path]] = walkFiles(fs, new Path(staged))
+      .map(_.getPath).filter(_.getName.startsWith("part-")).groupBy(_.getParent)
     val planned = manifest.toSeq.map { case (t, enc, p, i, s, e) =>
       val encSeg = encodedOf.map { ec =>
         // Spark escapes special chars (e.g. '/') in dynamic-partition
@@ -493,34 +486,62 @@ object BatchWriter {
     * files load without directory discovery and `part` is the Kafka
     * partition in each file's committed name. The encoded directories
     * add no columns — their values are derived from payload columns
-    * the files already carry. */
+    * the files already carry.
+    *
+    * mergeSchema: a topic's schema can EVOLVE mid-stream (the
+    * schema-change rotation path writes the new shape into the same
+    * topic), so the read schema must be the UNION of the read set's
+    * file schemas — without it the reader samples one footer and
+    * silently drops evolved columns, and a DML rewrite would then
+    * destroy them in every file it touches. Per-read-set union also
+    * keeps DML schema-preserving: survivors of pre-evolution files
+    * rewrite in their own shape. (Parquet/ORC honor the option; json
+    * infers across files anyway; csv/text carry no schema.)
+    *
+    * Cost: the file index is built from `paths` themselves (see
+    * [[loggedFrame]]): each of their directories is listed once on the
+    * driver, so no read runs a listing job, however many files it
+    * names. The footer merge remains: one distributed pass over the
+    * read set; recording the schema per log version and passing it
+    * explicitly would remove it. A path that is not on disk (a file
+    * vacuumed under a time-travel pin) fails the read, naming it. */
   private[graft] def loadCommitted(spark: SparkSession, baseDir: String,
                                     format: String,
                                     paths: Seq[String]): DataFrame =
-    // mergeSchema: a topic's schema can EVOLVE mid-stream (the
-    // schema-change rotation path writes the new shape into the same
-    // topic), so the read schema must be the UNION of the read set's
-    // file schemas — without it the reader samples one footer and
-    // silently drops evolved columns, and a DML rewrite would then
-    // destroy them in every file it touches. Per-read-set union also
-    // keeps DML schema-preserving: survivors of pre-evolution files
-    // rewrite in their own shape. (Parquet/ORC honor the option; json
-    // infers across files anyway; csv/text carry no schema.) Cost:
-    // one distributed footer-merge pass over the read set — measured
-    // within run-to-run noise, and pruned reads (DML, index probes)
-    // touch few files; if a 100k-file full scan ever makes this the
-    // bottleneck, the escape hatch is recording the schema per log
-    // version and passing it explicitly.
     if (paths.forall(p => new Path(p).getParent.getName.startsWith("partition=")))
-      spark.read.option("basePath", baseDir).option("mergeSchema", "true")
-        .format(format).load(paths: _*)
+      loggedFrame(spark, format,
+        Map("basePath" -> baseDir, "mergeSchema" -> "true"), paths)
         .withColumnRenamed("partition", "part")
         // partition-dir discovery infers int; the stream schema is long
         .withColumn("part", col("part").cast("long"))
     else
-      spark.read.option("mergeSchema", "true").format(format).load(paths: _*)
+      loggedFrame(spark, format, Map("mergeSchema" -> "true"), paths)
         .withColumn("part",
           FileNaming.extractPartition(col("_metadata.file_name")).cast("long"))
+
+  /** [[LoggedRelation.load]] of `paths`, whose statuses come from one
+    * listing of each parent directory, kept to the requested names. */
+  private def loggedFrame(spark: SparkSession, format: String,
+                          options: Map[String, String],
+                          paths: Seq[String]): DataFrame = {
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+    // qualified as the reader qualifies them: the index's root paths
+    // (and the plan's `Location`) are the same strings as before
+    val qualified = paths.map { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoopConf)
+      path.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    }
+    val wanted = qualified.toSet
+    val statuses = LoggedRelation
+      .leafFiles(spark, qualified.map(_.getParent).distinct, hadoopConf)
+      .collect { case st if wanted(st.getPath) => st.getPath -> st }.toMap
+    qualified.find(p => !statuses.contains(p)).foreach { p =>
+      throw new java.io.FileNotFoundException(
+        s"committed file $p is not on disk (vacuumed or deleted)")
+    }
+    LoggedRelation.load(spark, format, options, qualified, statuses)
+  }
 
   /** One job: read only the files being merged, assign group index by
     * offset range (broadcast ranges), and commit through the standard
@@ -575,15 +596,20 @@ object BatchWriter {
     val root = fs.makeQualified(new Path(s"$outDir/$topic"))
     if (!fs.exists(root)) return Seq.empty
     val rootUri = root.toUri.getPath
-    val it = fs.listFiles(root, true)
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (p.getName.matches(FileNaming.CommittedFilenameRegex))
-        out += p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-    }
-    out.result().sorted
+    walkFiles(fs, root).map(_.getPath)
+      .filter(_.getName.matches(FileNaming.CommittedFilenameRegex))
+      .map(_.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"))
+      .sorted
   }
+
+  /** Every file under `dir`, at any depth: one `listStatus` per
+    * directory. Not `listFiles(recursive)`: its located statuses load
+    * permissions, which the local filesystem does by forking a process
+    * per file. */
+  private[ingest] def walkFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) walkFiles(fs, st.getPath) else Seq(st)
+    }
 
   /** Offset restore (A21/B11, `FileUtils.java:106-149`): max committed
     * end offset per kafka partition, from filenames alone. */

@@ -1407,18 +1407,11 @@ object CommitLog {
     if (!f.exists(root)) return Seq.empty
     val rootUri = root.toUri.getPath
     val cutoff = System.currentTimeMillis() - graceMs
-    val it = f.listFiles(root, true)
-    val doomed = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val st = it.next()
-      val p = st.getPath
-      if (p.getName.matches(FileNaming.CommittedFilenameRegex) &&
-        st.getModificationTime <= cutoff) {
-        val rel = p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-        if (!live.contains(rel)) doomed += rel
-      }
-    }
-    val out = doomed.result()
+    val out = BatchWriter.walkFiles(f, root).collect {
+      case st if st.getPath.getName.matches(FileNaming.CommittedFilenameRegex) &&
+          st.getModificationTime <= cutoff =>
+        st.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
+    }.filterNot(live.contains)
     out.foreach(rel => f.delete(new Path(root, rel), false))
     out
   }

@@ -3,7 +3,11 @@ package graft.ingest
 import java.time.{Instant, ZoneId}
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation,
+  LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -48,11 +52,23 @@ object Rotation {
   /** Whether `df`'s physical plan already clusters its rows by `keys`,
     * so every row of one key value lives in one partition — the test
     * Spark's `EnsureRequirements` makes before it adds an exchange. A
-    * key that is not a plain column of `df` answers false. Plans `df`;
-    * runs no job. */
+    * key that is not a plain column of `df` answers false. Plans `df`
+    * unless its logical plan alone settles the answer; runs no job. */
   private[ingest] def clusteredBy(df: DataFrame, keys: Seq[Column]): Boolean =
-    !df.isStreaming && df.queryExecution.sparkPlan.outputPartitioning.satisfies(
-      ClusteredDistribution(df.select(keys: _*).queryExecution.analyzed.output))
+    !df.isStreaming && !neverClustered(df.queryExecution.withCachedData) &&
+      df.queryExecution.sparkPlan.outputPartitioning.satisfies(
+        ClusteredDistribution(df.select(keys: _*).queryExecution.analyzed.output))
+
+  /** A plan of only projections, filters, local rows and unbucketed
+    * file scans (after cached-data substitution) has no partitioning to
+    * keep, so planning it cannot answer yes. Any other node (a join, an
+    * aggregate, a window, a repartition, a cached relation) is planned.
+    * A wrong "no" would cost an exchange, never correctness. */
+  private def neverClustered(plan: LogicalPlan): Boolean = !plan.exists {
+    case _: Project | _: Filter | _: LocalRelation => false
+    case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.bucketSpec.isDefined
+    case _ => true
+  }
 
   /** Add the per-key minimum of `valueCol` as column `as`: a window
     * over the keys, inside each task, when `inTask` (the input is

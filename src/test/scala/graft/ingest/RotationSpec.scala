@@ -39,6 +39,25 @@ class RotationSpec extends SparkSuite {
       .as[(Long, Long, Long)].collect().toSet)
   }
 
+  test("clusteredBy answers a local or file input without planning it; a repartition is planned") {
+    import org.apache.spark.sql.catalyst.QueryPlanningTracker.PLANNING
+    def planned(df: DataFrame) = df.queryExecution.tracker.phases.contains(PLANNING)
+    val rows = spark.createDataset((0L until 12L).map(o => (o % 3, o, s"v$o")))
+      .toDF("part", "off", "payload")
+    val out = java.nio.file.Files.createTempDirectory("rot-decide").toString
+    CommitLog.writeLogged(rows, out, "t", flushSize = 2)
+    assert(!planned(rows), "a local input is decided from its logical plan")
+    val read = CommitLog.read(spark, out, "t").filter(col("off") > 1)
+    assert(!Rotation.clusteredBy(read, Seq(col("part"))) && !planned(read))
+    val byPart = rows.repartition(2, col("part"))
+    assert(Rotation.clusteredBy(byPart, Seq(col("part"))), "the in-task path")
+    assert(planned(byPart))
+    CommitLog.writeLogged(byPart, out, "u", flushSize = 2)
+    def names(topic: String) = CommitLog.snapshot(spark, out, topic)
+      .map(new org.apache.hadoop.fs.Path(_).getName.replaceFirst("^[tu]\\+", "")).sorted
+    assert(names("u") === names("t"), "both paths commit the same files")
+  }
+
   test("withSizeFileIndex reproduces the flush.size=3 file split") {
     val df = (0L to 6L).map(o => ("t", 12L, o)).toDF("topic", "part", "off")
     val got = Rotation.withSizeFileIndex(df, Seq(col("part")), col("off"), 3)
